@@ -489,22 +489,29 @@ object Bench {
           require(n == 100000L, s"expected 100k kafka messages, got $n")
         }
         // the reference benchmark's RELAY workload (consume + produce,
-        // benchmark/README.md) priced through the EXACTLY-ONCE matrix:
+        // benchmark/README.md) priced through the EXACTLY-ONCE relay:
         // the same 100k messages drain kafka→kafka transactionally
         // (KIP-98 txn per epoch, offsets staged in-txn) and then
         // kafka→redis (WATCH-fenced destination ledger) — the full EOS
-        // machinery, not a bare forward, is what a production relay pays
-        timed("xp_eos_relay_kafka_100k") {
-          val n = graft.kafka.KafkaEosRelay.relayAll(spark, srv.host,
-            srv.port, Seq("bench"), _ + "_out", "g_xp_relay", "xprelay")
+        // machinery, not a bare forward, is what a production relay pays.
+        // Noise-class like the produce cells: warmup + median-of-5, each
+        // run under a fresh anchor into a fresh destination stream.
+        val relaySrc = graft.relay.RelaySource.Kafka(
+          graft.relay.KafkaAt(srv.host, srv.port), Seq("bench"))
+        timedMedianRuns("xp_eos_relay_kafka_100k", 5, warmup = true) { i =>
+          val n = graft.relay.EosRelay.relayAll(spark, relaySrc,
+            graft.relay.RelaySink.Kafka(graft.relay.KafkaAt(srv.host,
+              srv.port), s"g_xp_relay_r${i + 1}", s"xprelay_r${i + 1}",
+              _ => s"bench_out_r${i + 1}"))
           require(n == 100000L, s"expected 100k relayed, got $n")
         }
         locally {
           val rsrv = new graft.redis.EmbeddedRedis
-          try timed("xp_eos_relay_redis_100k") {
-            val n = graft.redis.RedisEosRelay.relayAll(spark, srv.host,
-              srv.port, Seq("bench"), _ => "bench_r", rsrv.host, rsrv.port,
-              "xprled")
+          try timedMedianRuns("xp_eos_relay_redis_100k", 5,
+              warmup = true) { i =>
+            val n = graft.relay.EosRelay.relayAll(spark, relaySrc,
+              graft.relay.RelaySink.Redis(graft.relay.RedisAt(rsrv.host,
+                rsrv.port), s"xprled_r${i + 1}", _ => s"bench_r${i + 1}"))
             require(n == 100000L, s"expected 100k relayed, got $n")
           } finally rsrv.close()
         }

@@ -2,7 +2,8 @@ package graft.analytics
 
 import org.apache.spark.sql.functions._
 
-import graft.iggy.{EmbeddedIggy, IggyEosRelay, IggySource}
+import graft.iggy.{EmbeddedIggy, IggySource}
+import graft.relay.{EosRelay, Faults, IggyAt, KafkaAt, RedisAt, RelaySink, RelaySource}
 
 /** Iggy-backend queries under the DuckDB oracle gate: each round-trips the
   * `events` table through the embedded iggy-model broker — batched
@@ -183,21 +184,18 @@ object IggyTransport {
           val tlsC = graft.kafka.KafkaTls.ephemeral._2
           val creds = Some(("graft", "graft-secret"))
           val mech = graft.kafka.KafkaWire.Scram.Sha256
+          val source = RelaySource.Iggy(IggyAt(srv.host, srv.port,
+            OracleAuth), Transport.eventTypes)
+          val sink = RelaySink.Kafka(KafkaAt(ksrv.host, ksrv.port, creds,
+            mech, Some(tlsC)), "g_i5", "i5eos", (t: String) => t)
           graft.ops.Failpoints.arm("i5-relay-crash")
           val crashed = try {
-            IggyEosRelay.relayKafkaOnce(s, srv.host, srv.port,
-              IggySource.DefaultStream, Transport.eventTypes, (t: String) => t,
-              ksrv.host, ksrv.port, "g_i5", "i5eos", cap,
-              iggyAuth = OracleAuth, sasl = creds, saslMechanism = mech,
-              tls = Some(tlsC), crashBeforeCommit = Some("i5-relay-crash"))
+            EosRelay.relayOnce(s, source, sink, cap,
+              Faults(crashBeforeCommit = Some("i5-relay-crash")))
             false
           } catch { case _: Exception => true }
           require(crashed, "the injected mid-relay crash did not fire")
-          IggyEosRelay.relayKafkaAll(s, srv.host, srv.port,
-            IggySource.DefaultStream, Transport.eventTypes, (t: String) => t,
-            ksrv.host, ksrv.port, "g_i5", "i5eos", cap,
-            iggyAuth = OracleAuth, sasl = creds, saslMechanism = mech,
-            tls = Some(tlsC))
+          EosRelay.relayAll(s, source, sink, cap)
           val replay = graft.kafka.KafkaSource.boundedRead(s, ksrv.host,
             ksrv.port, Transport.eventTypes, sasl = creds,
             saslMechanism = mech, tls = Some(tlsC),
@@ -220,19 +218,18 @@ object IggyTransport {
             auth = OracleAuth)
           val cap = math.max(20L, t.events.count() / 20 / 4)
           val rAuth = RedisTransport.OracleAuth
+          val source = RelaySource.Iggy(IggyAt(srv.host, srv.port,
+            OracleAuth), Transport.eventTypes)
+          val sink = RelaySink.Redis(RedisAt(rsrv.host, rsrv.port,
+            auth = rAuth), "i6eos", (t: String) => t)
           graft.ops.Failpoints.arm("i6-relay-crash")
           val crashed = try {
-            IggyEosRelay.relayRedisOnce(s, srv.host, srv.port,
-              IggySource.DefaultStream, Transport.eventTypes, (t: String) => t,
-              rsrv.host, rsrv.port, "i6eos", cap, iggyAuth = OracleAuth,
-              auth = rAuth, crashBeforeCommit = Some("i6-relay-crash"))
+            EosRelay.relayOnce(s, source, sink, cap,
+              Faults(crashBeforeCommit = Some("i6-relay-crash")))
             false
           } catch { case _: Exception => true }
           require(crashed, "the injected mid-relay crash did not fire")
-          IggyEosRelay.relayRedisAll(s, srv.host, srv.port,
-            IggySource.DefaultStream, Transport.eventTypes, (t: String) => t,
-            rsrv.host, rsrv.port, "i6eos", cap, iggyAuth = OracleAuth,
-            auth = rAuth)
+          EosRelay.relayAll(s, source, sink, cap)
           val shards = Transport.eventTypes
             .flatMap(st => (0L until 4L).map(sh => (st, sh)))
           val replay = graft.redis.RedisSource.boundedRead(s, rsrv.host,

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.functions._
 
 import graft.kafka.{EmbeddedKafka, KafkaSource}
+import graft.relay.{EosRelay, Faults, KafkaAt, RedisAt, RelaySink, RelaySource}
 
 /** Kafka-backend queries under the DuckDB oracle gate: each round-trips the
   * `events` table through the embedded Kafka-protocol broker — v2 record
@@ -335,24 +336,18 @@ object KafkaTransport {
             p.abort()
           } finally poison.close()
           val cap = math.max(20L, t.events.count() / 20 / 4)
+          val source = RelaySource.Kafka(KafkaAt(srv.host, srv.port,
+            Some(SaslCreds), Mech, Some(tlsClient)), srcTopics)
+          val sink = RelaySink.Redis(RedisAt(redisSrv.host, redisSrv.port,
+            auth = RedisTransport.OracleAuth), "r10eos", _.stripPrefix("src_"))
           graft.ops.Failpoints.arm("r10-relay-crash")
           val crashed = try {
-            graft.redis.RedisEosRelay.relayOnce(s, srv.host, srv.port,
-              srcTopics, _.stripPrefix("src_"),
-              redisSrv.host, redisSrv.port, "r10eos", cap,
-              sasl = Some(SaslCreds), saslMechanism = Mech,
-              kafkaTls = Some(tlsClient),
-              redisAuth = RedisTransport.OracleAuth,
-              crashBeforeCommit = Some("r10-relay-crash"))
+            EosRelay.relayOnce(s, source, sink, cap,
+              Faults(crashBeforeCommit = Some("r10-relay-crash")))
             false
           } catch { case _: Exception => true }
           require(crashed, "the injected mid-relay crash did not fire")
-          graft.redis.RedisEosRelay.relayAll(s, srv.host, srv.port,
-            srcTopics, _.stripPrefix("src_"),
-            redisSrv.host, redisSrv.port, "r10eos", cap,
-            sasl = Some(SaslCreds), saslMechanism = Mech,
-            kafkaTls = Some(tlsClient),
-            redisAuth = RedisTransport.OracleAuth)
+          EosRelay.relayAll(s, source, sink, cap)
           val shards = Transport.eventTypes
             .flatMap(st => (0L until 4L).map(sh => (st, sh)))
           val replay = graft.redis.RedisSource.boundedRead(s,
@@ -389,26 +384,21 @@ object KafkaTransport {
           val shards = Transport.eventTypes.map("src_" + _)
             .flatMap(st => (0L until 4L).map(sh => (st, sh)))
           val cap = math.max(20L, t.events.count() / 20 / 4)
+          val source = RelaySource.Redis(RedisAt(redisSrv.host,
+            redisSrv.port, auth = RedisTransport.OracleAuth), shards)
+          val sink = RelaySink.Kafka(KafkaAt(srv.host, srv.port,
+            Some(SaslCreds), Mech, Some(tlsClient)), "g_k11_ingest", "k11eos",
+            _.stripPrefix("src_"))
           graft.kafka.KafkaEosSink.arm("k11-ingest-crash")
           val crashed = try {
-            graft.kafka.KafkaEosIngest.relayOnce(s,
-              redisSrv.host, redisSrv.port, shards, _.stripPrefix("src_"),
-              srv.host, srv.port, "g_k11_ingest", "k11eos", cap,
-              sasl = Some(SaslCreds), saslMechanism = Mech,
-              kafkaTls = Some(tlsClient),
-              redisAuth = RedisTransport.OracleAuth,
-              crashBeforeCommit = Some("k11-ingest-crash"))
+            EosRelay.relayOnce(s, source, sink, cap,
+              Faults(crashBeforeCommit = Some("k11-ingest-crash")))
             false
           } catch { case _: Exception => true }
           require(crashed &&
             !graft.kafka.KafkaEosSink.armed("k11-ingest-crash"),
             "the injected mid-ingest crash did not fire")
-          graft.kafka.KafkaEosIngest.relayAll(s,
-            redisSrv.host, redisSrv.port, shards, _.stripPrefix("src_"),
-            srv.host, srv.port, "g_k11_ingest", "k11eos", cap,
-            sasl = Some(SaslCreds), saslMechanism = Mech,
-            kafkaTls = Some(tlsClient),
-            redisAuth = RedisTransport.OracleAuth)
+          EosRelay.relayAll(s, source, sink, cap)
           val replay = KafkaSource.boundedRead(s, srv.host, srv.port,
             Transport.eventTypes, sasl = Some(SaslCreds),
             saslMechanism = Mech, tls = Some(tlsClient),
@@ -439,20 +429,17 @@ object KafkaTransport {
           .filter(_.getName.endsWith(".ss")).sortBy(_.getName)
         val paths = files.map(_.getAbsolutePath).toSeq
         val cap = math.max(8192L, files.map(_.length()).max / 4)
+        val sink = RelaySink.Kafka(KafkaAt(srv.host, srv.port,
+          Some(SaslCreds), Mech, Some(tlsClient)), "g_k12_ship", "k12ship",
+          _.stripPrefix("src_"))
         graft.ops.Failpoints.arm("k12-ship-crash")
         val crashed = try {
-          graft.ss.SsEosShip.shipKafkaOnce(s, paths, _.stripPrefix("src_"),
-            srv.host, srv.port, "g_k12_ship", "k12ship", capBytes = cap,
-            sasl = Some(SaslCreds), saslMechanism = Mech,
-            tls = Some(tlsClient),
-            crashBeforeCommit = Some("k12-ship-crash"))
+          EosRelay.relayOnce(s, RelaySource.Ss(paths), sink, cap,
+            Faults(crashBeforeCommit = Some("k12-ship-crash")))
           false
         } catch { case _: Exception => true }
         require(crashed, "the injected mid-ship crash did not fire")
-        graft.ss.SsEosShip.shipKafkaAll(s, paths, _.stripPrefix("src_"),
-          srv.host, srv.port, "g_k12_ship", "k12ship", capBytes = cap,
-          sasl = Some(SaslCreds), saslMechanism = Mech,
-          tls = Some(tlsClient))
+        EosRelay.relayAll(s, RelaySource.Ss(paths), sink, cap)
         val replay = KafkaSource.boundedRead(s, srv.host, srv.port,
           Transport.eventTypes, sasl = Some(SaslCreds),
           saslMechanism = Mech, tls = Some(tlsClient),
@@ -502,19 +489,20 @@ object KafkaTransport {
                 .getBytes("UTF-8")))))
           p.abort()
         } finally poison.close()
+        val at = KafkaAt(srv.host, srv.port, Some(SaslCreds), Mech,
+          Some(tlsClient))
+        val source = RelaySource.Kafka(at, srcTopics)
+        val sink = RelaySink.Kafka(at, "g_k9_relay", "k9eos",
+          _.stripPrefix("src_"))
         graft.kafka.KafkaEosSink.arm("k9-relay-crash")
         val crashed = try {
-          graft.kafka.KafkaEosRelay.relayOnce(s, srv.host, srv.port,
-            srcTopics, _.stripPrefix("src_"), "g_k9_relay", "k9eos", cap,
-            sasl = Some(SaslCreds), saslMechanism = Mech,
-            tls = Some(tlsClient), crashBeforeCommit = Some("k9-relay-crash"))
+          EosRelay.relayOnce(s, source, sink, cap,
+            Faults(crashBeforeCommit = Some("k9-relay-crash")))
           false
         } catch { case _: Exception => true }
         require(crashed && !graft.kafka.KafkaEosSink.armed("k9-relay-crash"),
           "the injected mid-relay crash did not fire")
-        graft.kafka.KafkaEosRelay.relayAll(s, srv.host, srv.port,
-          srcTopics, _.stripPrefix("src_"), "g_k9_relay", "k9eos", cap,
-          sasl = Some(SaslCreds), saslMechanism = Mech, tls = Some(tlsClient))
+        EosRelay.relayAll(s, source, sink, cap)
         val replay = KafkaSource.boundedRead(s, srv.host, srv.port,
           Transport.eventTypes, sasl = Some(SaslCreds), saslMechanism = Mech,
           tls = Some(tlsClient), readCommitted = true).localCheckpoint(true)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.redis.{EmbeddedRedis, RedisClient, RedisGroupConsumer, RedisSource}
+import graft.relay.{EosRelay, Faults, RedisAt, RelaySink, RelaySource}
 
 /** Redis-backend queries under the DuckDB oracle gate: each round-trips the
   * `events` table through the embedded RESP server — pipelined XADD producer
@@ -238,18 +239,18 @@ object RedisTransport {
         val shards = Transport.eventTypes.map("src_" + _)
           .flatMap(st => (0L until 4L).map(sh => (st, sh)))
         val cap = math.max(20L, t.events.count() / 20 / 4)
+        val source = RelaySource.Redis(RedisAt(a.host, a.port,
+          auth = OracleAuth), shards)
+        val sink = RelaySink.Redis(RedisAt(b.host, b.port, auth = OracleAuth),
+          "r11eos", _.stripPrefix("src_"))
         graft.ops.Failpoints.arm("r11-pump-crash")
         val crashed = try {
-          graft.redis.RedisEosPump.relayOnce(s, a.host, a.port, shards,
-            _.stripPrefix("src_"), b.host, b.port, "r11eos", cap,
-            srcAuth = OracleAuth, dstAuth = OracleAuth,
-            crashBeforeCommit = Some("r11-pump-crash"))
+          EosRelay.relayOnce(s, source, sink, cap,
+            Faults(crashBeforeCommit = Some("r11-pump-crash")))
           false
         } catch { case _: Exception => true }
         require(crashed, "the injected mid-pump crash did not fire")
-        graft.redis.RedisEosPump.relayAll(s, a.host, a.port, shards,
-          _.stripPrefix("src_"), b.host, b.port, "r11eos", cap,
-          srcAuth = OracleAuth, dstAuth = OracleAuth)
+        EosRelay.relayAll(s, source, sink, cap)
         val replay = RedisSource.boundedRead(s, b.host, b.port,
           allShards(4), auth = OracleAuth).localCheckpoint(true)
         Transport.aggregate(replay, withDistinct = false)
@@ -264,10 +265,11 @@ object RedisTransport {
     // destination readback must hash-match one plain copy (AUTH on).
     // The dump uses the RECOMMENDED ship layout (`repartitionByKey` —
     // each destination key in exactly one part file, so sibling ship
-    // tasks never contend on shared WATCH keys; ShipLayoutProbe receipt:
-    // disjoint 3.2 s vs interleaved 4.9 s per 1M frames). The
-    // interleaved worst case stays pinned by SsEosShipSpec's shared-key
-    // race law and the adaptive commit gate.
+    // tasks never contend on shared WATCH keys; the round-16 ship-layout
+    // receipt in BENCH_LOCAL.md's "Round-16 ship-fix re-pricing": disjoint
+    // 3.2 s vs interleaved 4.9 s per 1M frames). The interleaved worst
+    // case stays pinned by SsEosShipSpec's shared-key race law and the
+    // adaptive commit gate.
     "r12_ss_redis_eos" -> { (s, dir) =>
       withServer { srv =>
         val t = Tables(s, dir)
@@ -280,18 +282,16 @@ object RedisTransport {
           .filter(_.getName.endsWith(".ss")).sortBy(_.getName)
         val paths = files.map(_.getAbsolutePath).toSeq
         val cap = math.max(8192L, files.map(_.length()).max / 4)
+        val sink = RelaySink.Redis(RedisAt(srv.host, srv.port,
+          auth = OracleAuth), "r12ship", _.stripPrefix("src_"))
         graft.ops.Failpoints.arm("r12-ship-crash")
         val crashed = try {
-          graft.ss.SsEosShip.shipRedisOnce(s, paths, _.stripPrefix("src_"),
-            srv.host, srv.port, "r12ship", capBytes = cap,
-            auth = OracleAuth,
-            crashBeforeCommit = Some("r12-ship-crash"))
+          EosRelay.relayOnce(s, RelaySource.Ss(paths), sink, cap,
+            Faults(crashBeforeCommit = Some("r12-ship-crash")))
           false
         } catch { case _: Exception => true }
         require(crashed, "the injected mid-ship crash did not fire")
-        graft.ss.SsEosShip.shipRedisAll(s, paths, _.stripPrefix("src_"),
-          srv.host, srv.port, "r12ship", capBytes = cap,
-          auth = OracleAuth)
+        EosRelay.relayAll(s, RelaySource.Ss(paths), sink, cap)
         val replay = RedisSource.boundedRead(s, srv.host, srv.port,
           allShards(4), auth = OracleAuth).localCheckpoint(true)
         Transport.aggregate(replay, withDistinct = false)
@@ -326,9 +326,10 @@ object RedisTransport {
         val streams = Transport.eventTypes.map("lag_" + _)
         val shards = streams.flatMap(st => (0L until 4L).map(sh => (st, sh)))
         val cap = math.max(20L, t.events.count() / 80L)
-        graft.redis.RedisEosPump.relayOnce(s, a.host, a.port, shards,
-          identity, b.host, b.port, "r13lag", cap,
-          srcAuth = OracleAuth, dstAuth = OracleAuth)
+        EosRelay.relayOnce(s,
+          RelaySource.Redis(RedisAt(a.host, a.port, auth = OracleAuth), shards),
+          RelaySink.Redis(RedisAt(b.host, b.port, auth = OracleAuth), "r13lag",
+            identity), cap)
         val sec = Map("redis.username" -> OracleUser,
           "redis.password" -> OraclePass)
         val ca = graft.facade.SeaStreamer.connect(

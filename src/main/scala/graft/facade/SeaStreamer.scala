@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Envelope, SeaStreamErr, StreamUrl, StreamerUri}
 import graft.ops.StdioParser
+import graft.relay.{IggyAt, KafkaAt, RedisAt, RelaySink, RelaySource}
 
 /** Backend-agnostic facade — the engine's public API layer, mirroring
   * `sea-streamer-socket`: one `connect(uri)` that dispatches on the URI
@@ -890,55 +891,80 @@ object SeaStreamer {
       if (!Envelope.isValidStreamKey(name) || name.isEmpty)
         throw SeaStreamErr.InvalidStreamKey(name)
 
-    // relay-dispatch accessors (read by SeaStreamer.relayExactlyOnce)
+    // relay ends (read by SeaStreamer.relayExactlyOnce and relayLag)
     private[facade] def relayScheme: String = scheme
     private[facade] def relaySpark: SparkSession = spark
     private[facade] def relayNodes: Seq[String] = allNodeAddrs
-    private[facade] def relayKafkaSecurity: graft.kafka.KafkaSecurity.Wire =
-      graft.kafka.KafkaSecurity.parse(security)
-    private[facade] def relayRedisTls: Option[graft.redis.RedisClient.Tls] =
-      redisTls
-    private[facade] def relayRedisAuth: Option[graft.redis.RedisClient.Auth] =
-      redisAuth
-    private[facade] def relayIggyAuth: (String, String) = iggyAuth
+
+    private def relayKafka: KafkaAt = {
+      val (h, p) = hostPort(allNodeAddrs.head, 9092)
+      val sec = graft.kafka.KafkaSecurity.parse(security)
+      KafkaAt(h, p, sec.sasl, sec.saslMechanism, sec.tls)
+    }
+
+    private def relayRedis: RedisAt = {
+      val (h, p) = hostPort(allNodeAddrs.head, 6379)
+      RedisAt(h, p, redisTls, redisAuth)
+    }
+
+    /** The relay source this endpoint reads: kafka topics, `redisShards`
+      * shards per redis stream, iggy topics of the default namespace
+      * stream, or the `.ss` part files of a directory (`*` = every
+      * stream).
+      */
+    private[facade] def relaySource(streams: Seq[String], redisShards: Int,
+        filePartitions: Int): RelaySource = scheme match {
+      case "kafka" => RelaySource.Kafka(relayKafka, streams)
+      case "redis" => RelaySource.Redis(relayRedis,
+        streams.flatMap(st => (0L until redisShards.toLong).map(st -> _)))
+      case "iggy" =>
+        val (h, p) = hostPort(allNodeAddrs.head, 8090)
+        RelaySource.Iggy(IggyAt(h, p, iggyAuth), streams)
+      case _ =>
+        val dir = new java.io.File(allNodeAddrs.head)
+        val parts = Option(dir.listFiles()).getOrElse(Array.empty)
+          .filter(_.getName.endsWith(".ss")).sortBy(_.getName)
+        if (parts.isEmpty) throw SeaStreamErr.Connect(
+          s"no .ss part files under ${dir.getPath}")
+        RelaySource.Ss(parts.map(_.getAbsolutePath).toSeq,
+          if (streams == Seq("*")) None else Some(streams.toSet), filePartitions)
+    }
+
+    /** The relay sink anchored at `anchor`: the consumer group and the
+      * transactional-id prefix `<anchor>-txn` on kafka, the ledger key
+      * prefix on redis.
+      */
+    private[facade] def relaySink(anchor: String,
+        rename: String => String): RelaySink =
+      if (scheme == "kafka")
+        RelaySink.Kafka(relayKafka, anchor, s"$anchor-txn", rename)
+      else RelaySink.Redis(relayRedis, anchor, rename)
   }
 
-  /** Exactly-once relay between two connected backends — ONE surface over
-    * the four-engine matrix, dispatched on the (source, destination)
-    * scheme pair the way the reference's socket crate dispatches
-    * per-backend (sea-streamer-socket/src/streamer.rs:21-45):
+  /** Exactly-once relay between two connected backends — one surface over
+    * [[graft.relay.EosRelay]], which picks one [[RelaySource]] by the
+    * source's scheme and one [[RelaySink]] by the destination's, the way
+    * the reference's socket crate picks a backend at run time
+    * (sea-streamer-socket/src/streamer.rs:21-45).
     *
-    *   - kafka→kafka: [[graft.kafka.KafkaEosRelay]] — resume point = the
-    *     consumer group's offsets, staged inside the destination
-    *     transaction (producer.rs:236-301);
-    *   - kafka→redis: [[graft.redis.RedisEosRelay]] — resume point = a
-    *     destination ledger key, atomic with the entries in one
-    *     WATCH-fenced MULTI/EXEC;
-    *   - redis→kafka: [[graft.kafka.KafkaEosIngest]] — the packed entry-id
-    *     cursor (message.rs:27-64) rides the group-offset staging;
-    *   - redis→redis: [[graft.redis.RedisEosPump]] — destination-ledger
-    *     cursor, the DR-mirror shape.
+    * Every seekable backend is a valid SOURCE: kafka topics (offsets,
+    * read up to the last stable offset), redis streams (packed entry ids,
+    * message.rs:27-64, `redisShards` shards each — redis shards live in
+    * key names, not broker metadata, consumer/shard.rs:34-36), iggy
+    * topics of the default `graft` namespace stream (dense offsets) and
+    * a `.ss` FILE directory (one frame-exact byte cursor per part file;
+    * `streams = Seq("*")` ships everything, a named subset consumes the
+    * other frames' positions without shipping them). The DESTINATION
+    * anchors the resume point: on kafka the cursor is staged under the
+    * consumer group `anchor` inside each transaction (transactional ids
+    * `"$anchor-txn-…"`, producer.rs:236-301); on redis it is a ledger key
+    * `"$anchor:{…}"` SET in the same WATCH-fenced MULTI/EXEC as the
+    * entries. Reuse the anchor to resume; change it to restart from the
+    * beginning. `rename` maps each source stream to its destination name
+    * — identity is refused when both ends share a broker (the relay would
+    * chase its own appends). Drains the source; returns records relayed.
     *
-    * `anchor` names the durable resume point: on kafka destinations it is
-    * the consumer group AND the transactional-id prefix (`anchor` /
-    * `"$anchor-txn"`); on redis destinations, the ledger key prefix. Reuse
-    * the same anchor to resume; change it to restart from the beginning.
-    * `rename` maps each source stream/topic to its destination name —
-    * identity is refused when both ends share a broker (a relay into its
-    * own source would chase its own appends forever). `redisShards` is
-    * the shard fan of redis SOURCES (redis shards live in key names, not
-    * broker metadata — the consumer must name them, consumer/shard.rs:
-    * 34-36); it is ignored for kafka sources, whose partitions come from
-    * Metadata. Drains the source completely; returns records relayed.
-    *
-    * Every seekable backend is a valid SOURCE: a `.ss` FILE directory
-    * ships via [[graft.ss.SsEosShip]] (log shipping: one frame-exact
-    * byte cursor per part file; pass `streams = Seq("*")` to ship
-    * everything, or name a subscription subset — skipped frames consume
-    * positions without shipping, like aborted slots on a kafka source),
-    * and an iggy endpoint relays via [[graft.iggy.IggyEosRelay]] (dense
-    * per-partition offsets, the default `graft` namespace stream). As a
-    * DESTINATION file/stdio/iggy stay refused — no transactional or
+    * File, stdio and iggy DESTINATIONS stay refused — no transactional or
     * compare-and-set primitive to anchor a resume point on — and
     * multi-node (cluster) endpoints need the hash-slot-aware writer
     * ([[graft.redis.RedisSource.writeExactlyOnceCluster]]): typed errors
@@ -956,34 +982,8 @@ object SeaStreamer {
         * `floorMod(shard_id, filePartitions)` — KafkaEosSink's rule;
         * broker sources carry their partition 1:1 instead). */
       filePartitions: Int = 4): Long = {
-    if (streams.isEmpty) throw SeaStreamErr.StreamKeyEmpty
-    streams.foreach { s =>
-      if (s != "*" && !Envelope.isValidStreamKey(s))
-        throw SeaStreamErr.InvalidStreamKey(s)
-    }
-    require(redisShards > 0, "redisShards must be positive")
+    checkRelay("relayExactlyOnce", source, destination, streams, redisShards)
     val (ss, ds) = (source.relayScheme, destination.relayScheme)
-    if (ss != "kafka" && ss != "redis" && ss != "file" && ss != "iggy")
-      throw SeaStreamErr.Unsupported(
-        s"relayExactlyOnce source on the '$ss' backend — no anchored" +
-          " cursor space to resume from")
-    if (ds != "kafka" && ds != "redis")
-      throw SeaStreamErr.Unsupported(
-        s"relayExactlyOnce destination on the '$ds' backend — no " +
-          "transactional or compare-and-set primitive to anchor the " +
-          "resume point on")
-    Seq("source" -> source, "destination" -> destination).foreach {
-      case (end, c) =>
-        if (c.relayNodes.size != 1)
-          throw SeaStreamErr.Unsupported(
-            s"relayExactlyOnce $end must be a single node, got " +
-              s"${c.relayNodes.mkString(",")} (redis clusters relay via " +
-              "RedisSource.writeExactlyOnceCluster's hash-slot form)")
-    }
-    if (streams.contains("*") && ss != "file")
-      throw SeaStreamErr.Unsupported(
-        s"the '*' wildcard relays only from file directories (their part" +
-          s" files carry every stream); a '$ss' source needs explicit names")
     if (streams.contains("*") && streams.size > 1)
       throw SeaStreamErr.Unsupported(
         "'*' mixed with named streams is ambiguous — it would read as a " +
@@ -1022,8 +1022,8 @@ object SeaStreamer {
     // a redis DESTINATION keys entries by rename(stream):shard, one relay
     // task per source coordinate — a NON-injective rename would hand one
     // destination key to several concurrent writers (the multi-writer
-    // hazard the file shipper defuses by WATCHing its key set); refuse at
-    // plan time instead of fencing forever
+    // hazard the file source's shared-key sub-epochs defuse by WATCHing
+    // their key set); refuse at plan time instead of fencing forever
     if (ds == "redis" && !streams.contains("*")) {
       val dup = streams.groupBy(rename).collect {
         case (d, srcs) if srcs.size > 1 => s"${srcs.mkString(" and ")} → '$d'"
@@ -1033,135 +1033,42 @@ object SeaStreamer {
           "relayExactlyOnce onto redis needs an INJECTIVE rename (one " +
             "destination stream per source): " + dup.mkString("; "))
     }
-    val spark = source.relaySpark
-    val shardList = streams.flatMap(st =>
-      (0L until redisShards.toLong).map(sh => (st, sh)))
-    def ssPaths: Seq[String] = {
-      val dir = new java.io.File(source.relayNodes.head)
-      val parts = Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".ss")).sortBy(_.getName)
-      if (parts.isEmpty) throw SeaStreamErr.Connect(
-        s"no .ss part files under ${dir.getPath}")
-      parts.map(_.getAbsolutePath).toSeq
-    }
-    def ssFilter: Option[Set[String]] =
-      if (streams == Seq("*")) None else Some(streams.toSet)
-    (ss, ds) match {
-      case ("kafka", "kafka") =>
-        if (!sameEndpoint)
-          throw SeaStreamErr.Unsupported(
-            "cross-cluster kafka→kafka relay is not supported: the group " +
-              "offsets staged in the transaction live on the SOURCE " +
-              "cluster, so both ends must be one cluster")
-        val (host, port) = hostPort(source.relayNodes.head, 9092)
-        val sec = source.relayKafkaSecurity
-        graft.kafka.KafkaEosRelay.relayAll(spark, host, port, streams,
-          rename, group = anchor, txnIdPrefix = s"$anchor-txn", cap = cap,
-          sasl = sec.sasl, saslMechanism = sec.saslMechanism, tls = sec.tls)
-      case ("kafka", "redis") =>
-        val (kh, kp) = hostPort(source.relayNodes.head, 9092)
-        val (rh, rp) = hostPort(destination.relayNodes.head, 6379)
-        val sec = source.relayKafkaSecurity
-        graft.redis.RedisEosRelay.relayAll(spark, kh, kp, streams, rename,
-          rh, rp, ledgerPrefix = anchor, cap = cap,
-          sasl = sec.sasl, saslMechanism = sec.saslMechanism,
-          kafkaTls = sec.tls, redisTls = destination.relayRedisTls,
-          redisAuth = destination.relayRedisAuth)
-      case ("redis", "kafka") =>
-        val (rh, rp) = hostPort(source.relayNodes.head, 6379)
-        val (kh, kp) = hostPort(destination.relayNodes.head, 9092)
-        val sec = destination.relayKafkaSecurity
-        graft.kafka.KafkaEosIngest.relayAll(spark, rh, rp, shardList,
-          rename, kh, kp, group = anchor, txnIdPrefix = s"$anchor-txn",
-          cap = cap, sasl = sec.sasl, saslMechanism = sec.saslMechanism,
-          kafkaTls = sec.tls, redisTls = source.relayRedisTls,
-          redisAuth = source.relayRedisAuth)
-      case ("redis", "redis") =>
-        val (ah, ap) = hostPort(source.relayNodes.head, 6379)
-        val (bh, bp) = hostPort(destination.relayNodes.head, 6379)
-        graft.redis.RedisEosPump.relayAll(spark, ah, ap, shardList,
-          rename, bh, bp, ledgerPrefix = anchor, cap = cap,
-          srcTls = source.relayRedisTls, srcAuth = source.relayRedisAuth,
-          dstTls = destination.relayRedisTls,
-          dstAuth = destination.relayRedisAuth)
-      case ("file", "kafka") =>
-        val (kh, kp) = hostPort(destination.relayNodes.head, 9092)
-        val sec = destination.relayKafkaSecurity
-        graft.ss.SsEosShip.shipKafkaAll(spark, ssPaths, rename, kh, kp,
-          group = anchor, txnIdPrefix = s"$anchor-txn",
-          capBytes = fileCapBytes, partitions = filePartitions,
-          onlyStreams = ssFilter, sasl = sec.sasl,
-          saslMechanism = sec.saslMechanism, tls = sec.tls)
-      case ("file", "redis") =>
-        val (rh, rp) = hostPort(destination.relayNodes.head, 6379)
-        graft.ss.SsEosShip.shipRedisAll(spark, ssPaths, rename, rh, rp,
-          ledgerPrefix = anchor, capBytes = fileCapBytes,
-          onlyStreams = ssFilter,
-          tls = destination.relayRedisTls,
-          auth = destination.relayRedisAuth)
-      case ("iggy", "kafka") =>
-        val (ih, ip) = hostPort(source.relayNodes.head, 8090)
-        val (kh, kp) = hostPort(destination.relayNodes.head, 9092)
-        val sec = destination.relayKafkaSecurity
-        graft.iggy.IggyEosRelay.relayKafkaAll(spark, ih, ip,
-          graft.iggy.IggySource.DefaultStream, streams, rename, kh, kp,
-          group = anchor, txnIdPrefix = s"$anchor-txn", cap = cap,
-          iggyAuth = source.relayIggyAuth, sasl = sec.sasl,
-          saslMechanism = sec.saslMechanism, tls = sec.tls)
-      case ("iggy", "redis") =>
-        val (ih, ip) = hostPort(source.relayNodes.head, 8090)
-        val (rh, rp) = hostPort(destination.relayNodes.head, 6379)
-        graft.iggy.IggyEosRelay.relayRedisAll(spark, ih, ip,
-          graft.iggy.IggySource.DefaultStream, streams, rename, rh, rp,
-          ledgerPrefix = anchor, cap = cap,
-          iggyAuth = source.relayIggyAuth,
-          tls = destination.relayRedisTls,
-          auth = destination.relayRedisAuth)
-      case other =>
-        throw SeaStreamErr.Unsupported(s"relayExactlyOnce $other")
-    }
+    if (ss == "kafka" && ds == "kafka" && !sameEndpoint)
+      throw SeaStreamErr.Unsupported(
+        "cross-cluster kafka→kafka relay is not supported: the group " +
+          "offsets staged in the transaction live on the SOURCE " +
+          "cluster, so both ends must be one cluster")
+    graft.relay.EosRelay.relayAll(source.relaySpark,
+      source.relaySource(streams, redisShards, filePartitions),
+      destination.relaySink(anchor, rename),
+      cap = if (ss == "file") fileCapBytes else cap)
   }
 
-  /** One coordinate's relay progress, from [[relayLag]]. `tip` and
-    * `cursor` share the relay's own position space — dense offsets for a
-    * kafka source (tip = the LAST STABLE OFFSET: aborted and still-open
-    * transactions are not relayable and must not count as lag), packed
-    * entry ids (`(ms << 16) | sub_seq`) for a redis source; `cursor` is
-    * the next-unrelayed position from the anchor (0 when the relay has
-    * never run). `behindRecords` is the pending position count for kafka
-    * sources — offsets, exactly kafka's own lag metric: slots occupied
-    * by aborted transactions and control markers count (they are
-    * positions the relay must still traverse), while records of a
-    * still-OPEN transaction never do (the tip is the LSO). Absent for
-    * redis sources (entry ids are sparse; counting would scan the
-    * backlog).
-    * `behindMs` is the backlog's time span, newest-pending minus
-    * oldest-pending entry timestamp — present for redis sources (ids
-    * carry their ms), absent for kafka (offset→time needs a fetch).
-    * For `.ss` FILE sources the coordinate is (file name, 0), tip/cursor
-    * are frame-exact byte offsets (tip = the last COMPLETE frame's end —
-    * a live appender's torn tail is never lag), and `behindBytes` is
-    * their distance. A drained coordinate reads behind 0 / Some(0).
-    */
-  final case class RelayLag(tip: Long, cursor: Long,
-      behindRecords: Option[Long], behindMs: Option[Long],
-      behindBytes: Option[Long] = None) {
-    def drained: Boolean = cursor >= tip
-  }
+  /** One coordinate's relay progress, from [[relayLag]]. */
+  type RelayLag = graft.relay.RelayLag
+  val RelayLag = graft.relay.RelayLag
 
   /** Progress probe for an exactly-once relay — the operational
-    * consumer-lag metric over the [[relayExactlyOnce]] matrix, measured
-    * with the SAME O(#coordinates) planning RPCs and the same isolation
-    * rules the relay itself plans with (a kafka source's tip is the LSO,
-    * so poisoned/open transactions never read as lag; a redis source's
-    * tip is the `XREVRANGE … COUNT 1` probe). Driver-side only — no
-    * Spark job, no data movement. Same scheme/endpoint validation and
-    * `anchor` semantics as the relay; coordinates are (stream/topic,
-    * shard/partition).
+    * consumer-lag metric over [[relayExactlyOnce]], read with the SAME
+    * source tips and sink cursors the relay plans with
+    * ([[graft.relay.EosRelay.lag]]), so the probe and the relay cannot
+    * disagree. Coordinates are (stream/topic, shard/partition), or
+    * (part file name, 0) for a `.ss` directory; [[RelayLag]] documents
+    * each source's backlog unit. Driver-side only — no Spark job, no
+    * data movement. Same scheme/endpoint validation and `anchor`
+    * semantics as the relay.
     */
   def relayLag(source: Connection, destination: Connection,
       streams: Seq[String], anchor: String,
       redisShards: Int = 4): Map[(String, Long), RelayLag] = {
+    checkRelay("relayLag", source, destination, streams, redisShards)
+    graft.relay.EosRelay.lag(source.relaySource(streams, redisShards, 4),
+      destination.relaySink(anchor, identity))
+  }
+
+  /** The validation [[relayExactlyOnce]] and [[relayLag]] share. */
+  private def checkRelay(op: String, source: Connection,
+      destination: Connection, streams: Seq[String], redisShards: Int): Unit = {
     if (streams.isEmpty) throw SeaStreamErr.StreamKeyEmpty
     streams.foreach { s =>
       if (s != "*" && !Envelope.isValidStreamKey(s))
@@ -1171,168 +1078,24 @@ object SeaStreamer {
     val (ss, ds) = (source.relayScheme, destination.relayScheme)
     if (ss != "kafka" && ss != "redis" && ss != "file" && ss != "iggy")
       throw SeaStreamErr.Unsupported(
-        s"relayLag source on the '$ss' backend — no anchored cursor " +
-          "space to measure")
+        s"$op source on the '$ss' backend — no anchored cursor space to " +
+          "resume from")
     if (ds != "kafka" && ds != "redis")
       throw SeaStreamErr.Unsupported(
-        s"relayLag destination on the '$ds' backend — only the relay " +
-          "matrix's destinations carry the anchored resume point")
-    if (streams.contains("*") && ss != "file")
-      throw SeaStreamErr.Unsupported(
-        s"the '*' wildcard measures only file directories; a '$ss' " +
-          "source needs explicit names")
+        s"$op destination on the '$ds' backend — no transactional or " +
+          "compare-and-set primitive to anchor the resume point on")
     Seq("source" -> source, "destination" -> destination).foreach {
       case (end, c) =>
         if (c.relayNodes.size != 1)
           throw SeaStreamErr.Unsupported(
-            s"relayLag $end must be a single node, got " +
-              c.relayNodes.mkString(","))
+            s"$op $end must be a single node, got " +
+              s"${c.relayNodes.mkString(",")} (redis clusters relay via " +
+              "RedisSource.writeExactlyOnceCluster's hash-slot form)")
     }
-    // the anchor side: where each coordinate's committed cursor lives
-    def cursors(coords: Seq[(String, Long)]): Map[(String, Long), Long] =
-      if (ds == "kafka") {
-        val (kh, kp) = hostPort(destination.relayNodes.head, 9092)
-        val sec = destination.relayKafkaSecurity
-        val c = new graft.kafka.KafkaClient(kh, kp, sasl = sec.sasl,
-          saslMechanism = sec.saslMechanism, tls = sec.tls)
-        try {
-          c.findCoordinator(anchor)
-          c.fetchOffsets(anchor, coords.groupBy(_._1).map {
-            case (st, ps) => st -> ps.map(_._2.toInt)
-          }).map { case ((t, p), off) => (t, p.toLong) -> off }
-        } finally c.close()
-      } else {
-        val (rh, rp) = hostPort(destination.relayNodes.head, 6379)
-        val c = new graft.redis.RedisClient(rh, rp,
-          tls = destination.relayRedisTls, auth = destination.relayRedisAuth)
-        try coords.flatMap { case (st, sh) =>
-          c.command(graft.redis.RedisStreams.get(s"$anchor:{$st/$sh}"): _*) match {
-            case graft.redis.Resp.Bulk(bs) =>
-              Some((st, sh) -> new String(bs, "UTF-8").toLong)
-            case _ => None
-          }
-        }.toMap finally c.close()
-      }
-    if (ss == "file") {
-      import graft.ss.SsOffsetWalk
-      val dir = new java.io.File(source.relayNodes.head)
-      val parts = Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".ss")).sortBy(_.getName)
-      val coords = parts.map(f => (f.getName, 0L)).toSeq
-      // the shipper's redis ledger key is `anchor:{<file>}` (no shard
-      // suffix — a file is one coordinate); the kafka side shares the
-      // generic (name, 0) group-offset coordinate
-      val cur =
-        if (ds == "kafka") cursors(coords)
-        else {
-          val (rh, rp) = hostPort(destination.relayNodes.head, 6379)
-          val c = new graft.redis.RedisClient(rh, rp,
-            tls = destination.relayRedisTls,
-            auth = destination.relayRedisAuth)
-          try coords.flatMap { case (name, sh) =>
-            c.command(graft.redis.RedisStreams.get(s"$anchor:{$name}"): _*) match {
-              case graft.redis.Resp.Bulk(bs) =>
-                Some((name, sh) -> new String(bs, "UTF-8").toLong)
-              case _ => None
-            }
-          }.toMap finally c.close()
-        }
-      parts.map { f =>
-        // a never-shipped file's cursor reads 0, but the first frame
-        // starts AFTER the 128-byte container header — floor the pending
-        // computation there so behindBytes is frame bytes, not header
-        val at = math.max(cur.getOrElse((f.getName, 0L), 0L),
-          graft.ss.SsFormat.HeaderSize.toLong)
-        // safeEnd returns `at` itself when nothing new is readable, so a
-        // drained (or torn-tail-only) file reads tip == cursor
-        val tip = SsOffsetWalk.safeEnd(f.getAbsolutePath, at).offset
-        (f.getName, 0L) -> RelayLag(tip, at,
-          behindRecords = None, behindMs = None,
-          behindBytes = Some(math.max(0L, tip - at)))
-      }.toMap
-    } else if (ss == "iggy") {
-      val (ih, ip) = hostPort(source.relayNodes.head, 8090)
-      val c = new graft.iggy.IggyClient(ih, ip,
-        username = source.relayIggyAuth._1,
-        password = source.relayIggyAuth._2)
-      val tips = try streams.flatMap { t =>
-        c.topicTips(graft.iggy.IggySource.DefaultStream, t).toSeq
-          .flatMap(_.zipWithIndex.map { case (tip, p) =>
-            (t, p.toLong) -> tip
-          })
-      }.toMap finally c.close()
-      val cur = cursors(tips.keys.toSeq)
-      tips.map { case (coord, tip) =>
-        val at = cur.getOrElse(coord, 0L)
-        coord -> RelayLag(tip, at,
-          behindRecords = Some(math.max(0L, tip - at)), behindMs = None)
-      }
-    } else if (ss == "kafka") {
-      val (kh, kp) = hostPort(source.relayNodes.head, 9092)
-      val sec = source.relayKafkaSecurity
-      val c = new graft.kafka.KafkaClient(kh, kp, sasl = sec.sasl,
-        saslMechanism = sec.saslMechanism, tls = sec.tls)
-      val tips = try {
-        val meta = c.metadata(streams)
-        streams.flatMap { t =>
-          meta.getOrElse(t, Seq.empty).map { p =>
-            val hw = c.listOffset(t, p, graft.kafka.KafkaWire.Ts.Latest)
-              .getOrElse(0L)
-            val lso = c.fetchIso(t, p, hw, maxBytes = 1,
-              readCommitted = true)._1
-            (t, p.toLong) -> lso
-          }
-        }.toMap
-      } finally c.close()
-      val cur = cursors(tips.keys.toSeq)
-      tips.map { case (coord, tip) =>
-        val at = cur.getOrElse(coord, 0L)
-        coord -> RelayLag(tip, at,
-          behindRecords = Some(math.max(0L, tip - at)), behindMs = None)
-      }
-    } else {
-      import graft.redis.{RedisStreams, Resp}
-      val (rh, rp) = hostPort(source.relayNodes.head, 6379)
-      val coords = streams.flatMap(st =>
-        (0L until redisShards.toLong).map(sh => (st, sh)))
-      val cur = cursors(coords)
-      val c = new graft.redis.RedisClient(rh, rp,
-        tls = source.relayRedisTls, auth = source.relayRedisAuth)
-      try coords.map { case (st, sh) =>
-        val key = RedisStreams.shardedKey(st, sh, sharded = true)
-        val tipNext = c.command(RedisStreams.xrevrangeTip(key): _*) match {
-          case v: Resp.Arr =>
-            RedisStreams.decodeEntriesWithIds(v, st, sh).headOption
-              .map { case (rawId, _) =>
-                // the probe shares the relays' packed-cursor space, so it
-                // shares their 64k/ms saturation refusal (aliased packing
-                // would mis-report lag as drained)
-                RedisStreams.guardSubSeq(rawId)
-                val (ms, sub) = RedisStreams.parseEntryId(rawId)
-                RedisStreams.packSeqNo(ms, sub) + 1L
-              }.getOrElse(0L)
-          case _ => 0L
-        }
-        val at = cur.getOrElse((st, sh), 0L)
-        val behindMs =
-          if (at >= tipNext) 0L
-          else {
-            // oldest pending = first entry at/after the cursor; its ms to
-            // the tip's ms is the backlog's time span
-            val start = RedisStreams.entryId(at >>> 16, at & 0xFFFFL)
-            c.command(RedisStreams.xrange(key, start, "+", Some(1)): _*) match {
-              case v: Resp.Arr =>
-                RedisStreams.decodeEntriesWithIds(v, st, sh).headOption
-                  .map { case (rawId, _) =>
-                    ((tipNext - 1L) >>> 16) - RedisStreams.parseEntryId(rawId)._1
-                  }.getOrElse(0L)
-              case _ => 0L
-            }
-          }
-        (st, sh) -> RelayLag(tipNext, at,
-          behindRecords = None, behindMs = Some(behindMs))
-      }.toMap finally c.close()
-    }
+    if (streams.contains("*") && ss != "file")
+      throw SeaStreamErr.Unsupported(
+        s"the '*' wildcard relays only from file directories (their part" +
+          s" files carry every stream); a '$ss' source needs explicit names")
   }
 
   final class Committer(opts: ConsumerOptions) {

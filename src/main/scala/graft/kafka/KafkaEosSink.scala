@@ -57,8 +57,6 @@ object KafkaEosSink {
     */
   def arm(token: String): Unit = graft.ops.Failpoints.arm(token)
   def armed(token: String): Boolean = graft.ops.Failpoints.armed(token)
-  private[kafka] def fire(token: String): Boolean =
-    graft.ops.Failpoints.fire(token)
 
   /** Write one micro-batch (epoch) exactly-once. `df` is envelope-shaped
     * (stream_key, shard_id, timestamp, payload); topic = stream_key,
@@ -96,45 +94,26 @@ object KafkaEosSink {
           val slot = TaskContext.getPartitionId()
           val client = new KafkaClient(host, port, sasl = sasl,
             saslMechanism = saslMechanism, tls = tls)
-          try {
-            // fence first, read the ledger second: a watermark read after
-            // the fence can't be advanced by a zombie (its commit would
-            // need the old epoch, which just died)
-            val producer = new KafkaTxnProducer(client,
-              s"$txnIdPrefix-$slot").initTransactions()
-            client.findCoordinator(ledgerGroup) // group RPCs go to the coordinator
-            val committed = client
-              .fetchOffsets(ledgerGroup, Map(ledger -> Seq(slot)))
-              .getOrElse((ledger, slot), 0L)
-            if (committed < epochId + 1) {
-              producer.begin()
-              val known = scala.collection.mutable.Set.empty[String]
-              rows.grouped(batchSize).foreach { chunk =>
-                chunk.groupBy(r =>
-                  (r._1, math.floorMod(r._2, partitions.toLong).toInt))
-                  .foreach { case ((topic, part), rs) =>
-                    if (known.add(topic)) {
-                      val parts = client.metadata(Seq(topic))
-                        .getOrElse(topic, Seq.empty)
-                      require(parts.size >= partitions,
-                        s"topic $topic has ${parts.size} partitions, " +
-                          s"need $partitions")
-                    }
-                    producer.send(topic, part,
-                      rs.map(r => (r._3.getTime, null: Array[Byte], r._4)),
-                      codec)
-                  }
-              }
-              producer.sendOffsetsToTransaction(ledgerGroup,
-                Map((ledger, slot) -> (epochId + 1)))
-              if (crashBeforeCommit.exists(fire))
-                throw new IllegalStateException(
-                  s"injected crash: slot $slot epoch $epochId " +
-                    "produced + staged, not committed")
-              producer.commit()
-              ()
-            } // else: replayed epoch, this slot already committed — skip
+          // the relay's kafka step: fence, read the ledger after the
+          // fence, skip a replayed (slot, epoch), else send + stage the
+          // bumped watermark + commit
+          try graft.relay.RelaySink.Kafka.step(client, s"$txnIdPrefix-$slot",
+            ledgerGroup, (ledger, slot), epochId + 1, crashBeforeCommit,
+            None) { (producer, _) =>
+            val known = scala.collection.mutable.Set.empty[String]
+            rows.grouped(batchSize).foreach { chunk =>
+              chunk.groupBy(r =>
+                (r._1, math.floorMod(r._2, partitions.toLong).toInt))
+                .foreach { case ((topic, part), rs) =>
+                  graft.relay.RelaySink.Kafka.send(client, producer, known,
+                    topic, part, partitions,
+                    rs.map(r => (r._3.getTime, null: Array[Byte], r._4)),
+                    codec)
+                }
+            }
+            ((), epochId + 1)
           } finally client.close()
+          ()
         }
       }
   }

@@ -1,7 +1,7 @@
 package graft.ops
 
 /** Test-only crash injection shared by the exactly-once writers
-  * ([[graft.kafka.KafkaEosSink]], [[graft.kafka.KafkaEosRelay]],
+  * ([[graft.kafka.KafkaEosSink]], the [[graft.relay.RelaySink]]s,
   * [[graft.redis.RedisSource.writeExactlyOnce]]): `arm(token)` then pass
   * the token as the writer's `crashBeforeCommit` — exactly ONE task (the
   * atomic winner of the `remove`) dies after staging its epoch but

@@ -1,13 +1,9 @@
 package graft.redis
 
-/** The ONE exactly-once commit protocol for every redis-DESTINATION
-  * relay engine ([[RedisEosPump]], [[RedisEosRelay]],
-  * [[graft.iggy.IggyEosRelay]]'s redis leg via [[commit]], and the file
-  * shipper [[graft.ss.SsEosShip]]'s multi-key sub-epochs via
-  * [[commitKeyed]]) — the round-16 self-review found the
-  * WATCH/skip/filter/floor/MULTI/EXEC/retry machinery triplicated and
-  * already drifting, and round 17 folded the shipper's last private
-  * variant in (VERDICT r16 ask #4):
+/** The ONE exactly-once commit protocol of the redis DESTINATION — the
+  * commit step of [[graft.relay.RelaySink.Redis]] for every relay source
+  * (kafka, redis, iggy and `.ss` files alike), whose ranges arrive as
+  * `(pos, dstKey, tsMs, payload)` entries via [[commitKeyed]]:
   *
   *   - WATCH the ledger AND the destination keys, then read the cursor
   *     UNDER the watch (a rival attempt of this coordinate cannot win
@@ -51,16 +47,15 @@ package graft.redis
   *     `command(EXEC)` were dead code, `command` throws first.
   *
   * Entries are `(pos, dstKey, tsMs, payload)` ascending by `pos` — the
-  * engine's cursor space (packed redis ids for the pump, kafka/iggy
-  * offsets for the relays, frame end-offsets minus one for the file
-  * shipper, whose cursor values are always frame boundaries). After the
-  * WHOLE batch lands the ledger reads `finalCursor` (≥ last pos + 1 —
-  * engines use it to consume trailing aborted/expired positions); a
-  * partial (shrunk) commit sets `last committed pos + 1` and loops for
-  * the remainder. Returns the number of entries THIS call committed (a
+  * source's cursor space (kafka/iggy offsets, packed redis ids, frame
+  * end-offsets minus one for `.ss` files, whose cursor values are always
+  * frame boundaries). After the WHOLE batch lands the ledger reads
+  * `finalCursor` (≥ last pos + 1 — it consumes trailing aborted, expired
+  * or filtered positions); a partial (shrunk) commit sets `last committed
+  * pos + 1` and loops for the remainder. Returns the number of entries THIS call committed (a
   * rival's share is excluded).
   *
-  * The `gate`/`gated`/`onNil`/`onApplied` seam lets the file shipper
+  * The `gate`/`gated`/`onNil`/`onApplied` seam lets shared-key sources
   * serialize commit sections per destination node adaptively (one redis
   * node applies every EXEC under a single mutation thread — overlapping
   * WATCH windows on shared keys only nil each other); the retry sleep
@@ -79,7 +74,7 @@ private[graft] object EosCommit {
     * pends — re-fence as advance-only (ledger WATCH alone). */
   private case object DropKeyWatch extends Outcome
 
-  /** Single-destination-key form — the pump/relay engines' shape. */
+  /** Single-destination-key form. */
   def commit(rc: RedisClient, ledger: String, dstKey: String,
       entries: Vector[(Long, Long, Array[Byte])],
       finalCursor: Long, label: String,

@@ -71,8 +71,8 @@ object RedisStreams {
 
   /** Refuse an entry id whose sub-sequence saturates the 16-bit packed
     * field. A relay whose resume cursor rides a packed SeqNo (the
-    * group-offset staging in [[graft.kafka.KafkaEosIngest]], the
-    * destination ledgers in [[RedisEosPump]]) would alias past 0xFFFF:
+    * [[graft.relay.RelaySource.Redis]] cursor, staged as a group offset
+    * or SET in a redis ledger) would alias past 0xFFFF:
     * the stored cursor could move BACKWARD in wire order (duplicates) and
     * the reconstructed XRANGE start could skip live entries (loss). The
     * reference shares the same 64k-entries-per-ms-per-shard ceiling

@@ -533,9 +533,11 @@ class SsWriteBuilder(path: String, info: LogicalWriteInfo)
     * inserts the shuffle/sort, and each destination key then lives in
     * exactly ONE part file. This is the 100 TB ship layout: with the
     * default task-local layout every part file carries every key, so a
-    * downstream exactly-once ship ([[graft.ss.SsEosShip]]) pays sibling
-    * WATCH conflicts on shared destination keys (ShipLayoutProbe: disjoint
-    * 3.2 s vs interleaved 4.9 s per 1M frames at the redis destination).
+    * downstream exactly-once relay ([[graft.relay.RelaySource.Ss]] into a
+    * redis sink) pays sibling WATCH conflicts on shared destination keys
+    * (the round-16 ship-layout receipt, BENCH_LOCAL.md's "Round-16
+    * ship-fix re-pricing": disjoint 3.2 s vs interleaved 4.9 s per 1M
+    * frames at the redis destination).
     * Off by default — a plain dump shouldn't pay a shuffle it may not
     * need; turn it on when the directory feeds a relay/ship.
     */

@@ -530,13 +530,14 @@ class LiveBrokerSpec extends AnyFunSuite {
       kc.metadata(Seq(topic))
       (0 until N).foreach(i => kc.produce(topic, 0,
         Seq((1700000000000L + i, null, s"r10-$i".getBytes("UTF-8")))))
-      val moved = redis.RedisEosRelay.relayAll(
-        graft.TestSession.spark, kh, kp, Seq(topic), _ => topic + "_dst",
-        rh, rp, prefix)
+      val source = relay.RelaySource.Kafka(relay.KafkaAt(kh, kp), Seq(topic))
+      val sink = relay.RelaySink.Redis(relay.RedisAt(rh, rp), prefix,
+        _ => topic + "_dst")
+      val moved = relay.EosRelay.relayAll(graft.TestSession.spark, source, sink)
       assert(moved == N, s"relayed $moved, want $N")
       // idempotent off the redis ledger alone
-      assert(redis.RedisEosRelay.relayAll(graft.TestSession.spark,
-        kh, kp, Seq(topic), _ => topic + "_dst", rh, rp, prefix) == 0L)
+      assert(relay.EosRelay.relayAll(graft.TestSession.spark, source,
+        sink) == 0L)
       val key = redis.RedisStreams
         .shardedKey(topic + "_dst", 0L, sharded = true)
       val got = rc.command(redis.RedisStreams.xrange(key): _*) match {
@@ -568,14 +569,16 @@ class LiveBrokerSpec extends AnyFunSuite {
       (0 until N).foreach(i => rc.command(redis.RedisStreams.xadd(
         key, 1700000000000L + i, s"k11-$i".getBytes("UTF-8")): _*))
       kc.metadata(Seq(stream + "_dst")) // auto-create the destination
-      val moved = kafka.KafkaEosIngest.relayAll(graft.TestSession.spark,
-        rh, rp, Seq((stream, 0L)), _ => stream + "_dst",
-        kh, kp, group, uniqueKey("k11txn"))
+      val source = relay.RelaySource.Redis(relay.RedisAt(rh, rp),
+        Seq((stream, 0L)))
+      def sink(txn: String) = relay.RelaySink.Kafka(relay.KafkaAt(kh, kp),
+        group, txn, _ => stream + "_dst")
+      val moved = relay.EosRelay.relayAll(graft.TestSession.spark, source,
+        sink(uniqueKey("k11txn")))
       assert(moved == N, s"ingested $moved, want $N")
       // idempotent off the staged group offset alone
-      assert(kafka.KafkaEosIngest.relayAll(graft.TestSession.spark,
-        rh, rp, Seq((stream, 0L)), _ => stream + "_dst",
-        kh, kp, group, uniqueKey("k11txn2")) == 0L)
+      assert(relay.EosRelay.relayAll(graft.TestSession.spark, source,
+        sink(uniqueKey("k11txn2"))) == 0L)
       val got = kc.fetchIso(stream + "_dst", 0, 0L, readCommitted = true)._3
         .map(r => new String(r.value, "UTF-8"))
       assert(got == (0 until N).map(i => s"k11-$i"),
@@ -596,12 +599,14 @@ class LiveBrokerSpec extends AnyFunSuite {
       val srcKey = redis.RedisStreams.shardedKey(stream, 0L, sharded = true)
       (0 until N).foreach(i => rc.command(redis.RedisStreams.xadd(
         srcKey, 1700000000000L + i, s"r11-$i".getBytes("UTF-8")): _*))
-      val moved = redis.RedisEosPump.relayAll(graft.TestSession.spark,
-        host, port, Seq((stream, 0L)), _ + "_mirror", host, port, prefix)
+      val source = relay.RelaySource.Redis(relay.RedisAt(host, port),
+        Seq((stream, 0L)))
+      val sink = relay.RelaySink.Redis(relay.RedisAt(host, port), prefix,
+        _ + "_mirror")
+      val moved = relay.EosRelay.relayAll(graft.TestSession.spark, source, sink)
       assert(moved == N, s"pumped $moved, want $N")
-      assert(redis.RedisEosPump.relayAll(graft.TestSession.spark,
-        host, port, Seq((stream, 0L)), _ + "_mirror", host, port,
-        prefix) == 0L, "a drained source must pump nothing")
+      assert(relay.EosRelay.relayAll(graft.TestSession.spark, source,
+        sink) == 0L, "a drained source must pump nothing")
       val dstKey = redis.RedisStreams
         .shardedKey(stream + "_mirror", 0L, sharded = true)
       val got = rc.command(redis.RedisStreams.xrange(dstKey): _*) match {
@@ -634,13 +639,14 @@ class LiveBrokerSpec extends AnyFunSuite {
     val kc = new kafka.KafkaClient(host, port)
     try {
       kc.metadata(Seq(stream + "_dst"))
-      val moved = ss.SsEosShip.shipKafkaAll(graft.TestSession.spark,
-        Seq(s"$dir/live.ss"), _ => stream + "_dst", host, port,
-        group, uniqueKey("k12txn"))
+      val source = relay.RelaySource.Ss(Seq(s"$dir/live.ss"))
+      def sink(txn: String) = relay.RelaySink.Kafka(relay.KafkaAt(host, port),
+        group, txn, _ => stream + "_dst")
+      val moved = relay.EosRelay.relayAll(graft.TestSession.spark, source,
+        sink(uniqueKey("k12txn")), 64L << 20)
       assert(moved == N, s"shipped $moved, want $N")
-      assert(ss.SsEosShip.shipKafkaAll(graft.TestSession.spark,
-        Seq(s"$dir/live.ss"), _ => stream + "_dst", host, port,
-        group, uniqueKey("k12txn2")) == 0L,
+      assert(relay.EosRelay.relayAll(graft.TestSession.spark, source,
+        sink(uniqueKey("k12txn2")), 64L << 20) == 0L,
         "a drained file must ship nothing")
       val got = kc.fetchIso(stream + "_dst", 0, 0L, readCommitted = true)._3
         .map(r => new String(r.value, "UTF-8"))
@@ -666,11 +672,14 @@ class LiveBrokerSpec extends AnyFunSuite {
     w.close()
     val rc = new redis.RedisClient(host, port)
     try {
-      val moved = ss.SsEosShip.shipRedisAll(graft.TestSession.spark,
-        Seq(s"$dir/live.ss"), identity, host, port, prefix)
+      val source = relay.RelaySource.Ss(Seq(s"$dir/live.ss"))
+      val sink = relay.RelaySink.Redis(relay.RedisAt(host, port), prefix,
+        identity)
+      val moved = relay.EosRelay.relayAll(graft.TestSession.spark, source,
+        sink, 64L << 20)
       assert(moved == N, s"shipped $moved, want $N")
-      assert(ss.SsEosShip.shipRedisAll(graft.TestSession.spark,
-        Seq(s"$dir/live.ss"), identity, host, port, prefix) == 0L)
+      assert(relay.EosRelay.relayAll(graft.TestSession.spark, source, sink,
+        64L << 20) == 0L)
       val key = redis.RedisStreams.shardedKey(stream, 0L, sharded = true)
       val got = rc.command(redis.RedisStreams.xrange(key): _*) match {
         case redis.Resp.Arr(items) => items
@@ -704,13 +713,15 @@ class LiveBrokerSpec extends AnyFunSuite {
         iggy.IggyWire.Partitioning.PartitionId(0),
         Seq((1700000000000L + i, s"i5-$i".getBytes("UTF-8")))))
       kc.metadata(Seq(topic + "_dst"))
-      val moved = iggy.IggyEosRelay.relayKafkaAll(graft.TestSession.spark,
-        ih, ip, "graft", Seq(topic), _ + "_dst", kh, kp, group,
-        uniqueKey("i5txn"), iggyAuth = (iu, ipw))
+      val source = relay.RelaySource.Iggy(
+        relay.IggyAt(ih, ip, (iu, ipw), "graft"), Seq(topic))
+      def sink(txn: String) = relay.RelaySink.Kafka(relay.KafkaAt(kh, kp),
+        group, txn, _ + "_dst")
+      val moved = relay.EosRelay.relayAll(graft.TestSession.spark, source,
+        sink(uniqueKey("i5txn")))
       assert(moved == N, s"relayed $moved, want $N")
-      assert(iggy.IggyEosRelay.relayKafkaAll(graft.TestSession.spark,
-        ih, ip, "graft", Seq(topic), _ + "_dst", kh, kp, group,
-        uniqueKey("i5txn2"), iggyAuth = (iu, ipw)) == 0L)
+      assert(relay.EosRelay.relayAll(graft.TestSession.spark, source,
+        sink(uniqueKey("i5txn2"))) == 0L)
       val got = kc.fetchIso(topic + "_dst", 0, 0L, readCommitted = true)._3
         .map(r => new String(r.value, "UTF-8"))
       assert(got == (0 until N).map(i => s"i5-$i"),
@@ -738,13 +749,14 @@ class LiveBrokerSpec extends AnyFunSuite {
       (0 until N).foreach(i => ic.sendMessages("graft", topic,
         iggy.IggyWire.Partitioning.PartitionId(0),
         Seq((1700000000000L + i, s"i6-$i".getBytes("UTF-8")))))
-      val moved = iggy.IggyEosRelay.relayRedisAll(graft.TestSession.spark,
-        ih, ip, "graft", Seq(topic), _ => topic, rh, rp, prefix,
-        iggyAuth = (iu, ipw))
+      val source = relay.RelaySource.Iggy(
+        relay.IggyAt(ih, ip, (iu, ipw), "graft"), Seq(topic))
+      val sink = relay.RelaySink.Redis(relay.RedisAt(rh, rp), prefix,
+        _ => topic)
+      val moved = relay.EosRelay.relayAll(graft.TestSession.spark, source, sink)
       assert(moved == N, s"relayed $moved, want $N")
-      assert(iggy.IggyEosRelay.relayRedisAll(graft.TestSession.spark,
-        ih, ip, "graft", Seq(topic), _ => topic, rh, rp, prefix,
-        iggyAuth = (iu, ipw)) == 0L)
+      assert(relay.EosRelay.relayAll(graft.TestSession.spark, source,
+        sink) == 0L)
       val key = redis.RedisStreams.shardedKey(topic, 0L, sharded = true)
       val got = rc.command(redis.RedisStreams.xrange(key): _*) match {
         case redis.Resp.Arr(items) => items

@@ -3,6 +3,7 @@ package graft.kafka
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.redis.{EmbeddedRedis, RedisClient, RedisStreams}
+import graft.relay.{EosRelay, Faults, KafkaAt, RedisAt, RelaySink, RelaySource}
 
 /** Laws of the exactly-once Redis→Kafka ingest relay: the source cursor
   * (the reference's packed redis entry id, message.rs:27-64) stages
@@ -37,10 +38,12 @@ class KafkaEosIngestSpec extends AnyFunSuite {
           v.getBytes("UTF-8")): _*)
       }
       val spark0 = spark
+      val source = RelaySource.Redis(RedisAt(r.host, r.port), Seq(("src", 0L)))
+      val sink = RelaySink.Kafka(KafkaAt(k.host, k.port), "g_ing", "ing",
+        _ => "dst")
       def ingest(crash: Option[String]) =
-        KafkaEosIngest.relayOnce(spark0, r.host, r.port, Seq(("src", 0L)),
-          _ => "dst", k.host, k.port, "g_ing", "ing", cap = 6L,
-          crashBeforeCommit = crash)
+        EosRelay.relayOnce(spark0, source, sink, cap = 6L,
+          Faults(crashBeforeCommit = crash))
       // epoch 1: capped at 6; the staged cursor is packed(last)+1 and
       // publishes WITH the entries (it is only readable post-commit)
       assert(ingest(None) == 6L, "cap must bound the epoch")
@@ -61,9 +64,7 @@ class KafkaEosIngestSpec extends AnyFunSuite {
         "a crashed epoch leaked records past the LSO")
       // drain resumes off the cursor alone: the crashed range re-relays,
       // then the rest; a further pass moves nothing
-      val moved = KafkaEosIngest.relayAll(spark0, r.host, r.port,
-        Seq(("src", 0L)), _ => "dst", k.host, k.port, "g_ing", "ing",
-        cap = 6L)
+      val moved = EosRelay.relayAll(spark0, source, sink, cap = 6L)
       assert(moved == 14L, s"drain relayed $moved, expected 14")
       assert(ingest(None) == 0L, "a drained source must relay nothing")
       assert(committedValues(kc, "dst") == vals,
@@ -103,18 +104,17 @@ class KafkaEosIngestSpec extends AnyFunSuite {
         finally zc.close()
       }
       kc.metadata(Seq("rz_dst"))
-      val moved = KafkaEosIngest.relayOnce(graft.TestSession.spark,
-        r.host, r.port, Seq(("rz", 0L)), _ => "rz_dst",
-        k.host, k.port, "g_rz", "rz-txn",
-        raceAfterFence = Some("rz-race"))
+      val source = RelaySource.Redis(RedisAt(r.host, r.port), Seq(("rz", 0L)))
+      val sink = RelaySink.Kafka(KafkaAt(k.host, k.port), "g_rz", "rz-txn",
+        _ => "rz_dst")
+      val moved = EosRelay.relayOnce(graft.TestSession.spark, source, sink,
+        faults = Faults(raceAfterFence = Some("rz-race")))
       assert(moved == 5L,
         s"the fenced attempt must retry in-task and land, moved $moved")
       assert(committedValues(kc, "rz_dst") == (0 until 5).map("z" + _),
         "the fence race duplicated or lost records")
       // the cursor landed with the retry's transaction
-      assert(KafkaEosIngest.relayOnce(graft.TestSession.spark,
-        r.host, r.port, Seq(("rz", 0L)), _ => "rz_dst",
-        k.host, k.port, "g_rz", "rz-txn") == 0L)
+      assert(EosRelay.relayOnce(graft.TestSession.spark, source, sink) == 0L)
     } finally { kc.close(); rc.close(); k.close(); r.close() }
   }
 
@@ -131,14 +131,15 @@ class KafkaEosIngestSpec extends AnyFunSuite {
         try { new KafkaTxnProducer(zc, "rr-txn-rr-0").initTransactions(); () }
         finally zc.close()
       }
-      val moved = KafkaEosRelay.relayOnce(graft.TestSession.spark,
-        k.host, k.port, Seq("rr"), _ + "_dst", "g_rr", "rr-txn",
-        raceAfterFence = Some("rr-race"))
+      val source = RelaySource.Kafka(KafkaAt(k.host, k.port), Seq("rr"))
+      val sink = RelaySink.Kafka(KafkaAt(k.host, k.port), "g_rr", "rr-txn",
+        _ + "_dst")
+      val moved = EosRelay.relayOnce(graft.TestSession.spark, source, sink,
+        faults = Faults(raceAfterFence = Some("rr-race")))
       assert(moved == 6L,
         s"the fenced relay must retry in-task and land, moved $moved")
       assert(committedValues(kc, "rr_dst") == (0 until 6).map("r" + _))
-      assert(KafkaEosRelay.relayOnce(graft.TestSession.spark,
-        k.host, k.port, Seq("rr"), _ + "_dst", "g_rr", "rr-txn") == 0L)
+      assert(EosRelay.relayOnce(graft.TestSession.spark, source, sink) == 0L)
     } finally { kc.close(); k.close() }
   }
 
@@ -153,18 +154,18 @@ class KafkaEosIngestSpec extends AnyFunSuite {
       (0 until 4).foreach(i => rc.command(
         RedisStreams.xadd(key, 2000L + i, s"v$i".getBytes("UTF-8")): _*))
       val spark0 = spark
-      assert(KafkaEosIngest.relayOnce(spark0, r.host, r.port,
-        Seq(("s2", 0L)), _ => "d2", k.host, k.port, "g2", "i2") == 4L)
+      def ingest() = EosRelay.relayOnce(spark0,
+        RelaySource.Redis(RedisAt(r.host, r.port), Seq(("s2", 0L))),
+        RelaySink.Kafka(KafkaAt(k.host, k.port), "g2", "i2", _ => "d2"))
+      assert(ingest() == 4L)
       // same epoch re-run (a restarted driver re-plans the same tip):
       // the post-fence cursor read sees the landed range and skips
-      assert(KafkaEosIngest.relayOnce(spark0, r.host, r.port,
-        Seq(("s2", 0L)), _ => "d2", k.host, k.port, "g2", "i2") == 0L)
+      assert(ingest() == 0L)
       assert(committedValues(kc, "d2") == Seq("v0", "v1", "v2", "v3"),
         "replay duplicated records")
       // new source entries relay from the cursor, not from scratch
       rc.command(RedisStreams.xadd(key, 3000L, "v4".getBytes("UTF-8")): _*)
-      assert(KafkaEosIngest.relayOnce(spark0, r.host, r.port,
-        Seq(("s2", 0L)), _ => "d2", k.host, k.port, "g2", "i2") == 1L)
+      assert(ingest() == 1L)
       assert(committedValues(kc, "d2") ==
         Seq("v0", "v1", "v2", "v3", "v4"))
     } finally { kc.close(); rc.close(); k.close(); r.close() }

@@ -2,6 +2,8 @@ package graft.kafka
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.relay.{EosRelay, Faults, KafkaAt, RelaySink, RelaySource}
+
 /** Laws of the exactly-once Spark→Kafka sink (VERDICT r13 #1 — the
   * reference's consume-transform-produce loop,
   * sea-streamer-kafka/src/producer.rs:236-301, composed into foreachBatch):
@@ -96,10 +98,12 @@ class KafkaEosSinkSpec extends AnyFunSuite {
       vals.zipWithIndex.foreach { case (v, i) =>
         c.produce("src", 0, Seq((1000L + i, null, v.getBytes("UTF-8"))))
       }
+      val source = RelaySource.Kafka(KafkaAt(srv.host, srv.port), Seq("src"))
+      val sink = RelaySink.Kafka(KafkaAt(srv.host, srv.port), "g_relay",
+        "rel", _ => "dst")
       val relay = (crash: Option[String]) =>
-        KafkaEosRelay.relayOnce(spark, srv.host, srv.port, Seq("src"),
-          _ => "dst", "g_relay", "rel", cap = 6L,
-          crashBeforeCommit = crash)
+        EosRelay.relayOnce(spark, source, sink, cap = 6L,
+          Faults(crashBeforeCommit = crash))
       // epoch 1: capped at 6
       assert(relay(None) == 6L, "cap must bound the epoch")
       assert(c.fetchOffsets("g_relay", Map("src" -> Seq(0)))
@@ -112,8 +116,7 @@ class KafkaEosSinkSpec extends AnyFunSuite {
         "a crashed epoch must not advance the resume point")
       // drain: the crashed range re-relays (its aborted copy is fenced
       // away), then the rest; a further pass moves nothing
-      val moved = KafkaEosRelay.relayAll(spark, srv.host, srv.port,
-        Seq("src"), _ => "dst", "g_relay", "rel", cap = 6L)
+      val moved = EosRelay.relayAll(spark, source, sink, cap = 6L)
       assert(moved == 14L, s"drain relayed $moved, expected 14")
       assert(relay(None) == 0L, "a drained source must relay nothing")
       // exactly-once: the read_committed view is the source, once each
@@ -147,8 +150,10 @@ class KafkaEosSinkSpec extends AnyFunSuite {
       open.send("src", 0, Seq((300L, null, "late1".getBytes("UTF-8"))))
       // ...with committed rows ABOVE it, unreadable until it resolves
       c.produce("src", 0, Seq((400L, null, "m6".getBytes("UTF-8"))))
-      def relay() = KafkaEosRelay.relayAll(spark, srv.host, srv.port,
-        Seq("src"), _ => "dst", "g_iso", "reliso")
+      def relay() = EosRelay.relayAll(spark,
+        RelaySource.Kafka(KafkaAt(srv.host, srv.port), Seq("src")),
+        RelaySink.Kafka(KafkaAt(srv.host, srv.port), "g_iso", "reliso",
+          _ => "dst"))
       def dstVals = c.fetchIso("dst", 0, 0L, readCommitted = true)._3
         .map(r => new String(r.value, "UTF-8"))
       // first drain: exactly the committed-below-LSO rows — the aborted
@@ -226,9 +231,11 @@ class KafkaEosSinkSpec extends AnyFunSuite {
         val tok = s"rstorm-$guard"
         if (crash) { KafkaEosSink.arm(tok); crashes += 1 }
         try {
-          val moved = KafkaEosRelay.relayOnce(spark, srv.host, srv.port,
-            Seq("src"), _ => "dst", "g_storm", "rstorm", cap = 7L,
-            crashBeforeCommit = if (crash) Some(tok) else None)
+          val moved = EosRelay.relayOnce(spark,
+            RelaySource.Kafka(KafkaAt(srv.host, srv.port), Seq("src")),
+            RelaySink.Kafka(KafkaAt(srv.host, srv.port), "g_storm", "rstorm",
+              _ => "dst"), cap = 7L,
+            Faults(crashBeforeCommit = if (crash) Some(tok) else None))
           if (moved == 0L) drained = true
         } catch { case _: Exception => () }
       }

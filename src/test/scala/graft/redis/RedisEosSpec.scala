@@ -2,6 +2,8 @@ package graft.redis
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.relay.{EosRelay, Faults, KafkaAt, RedisAt, RelaySink, RelaySource}
+
 /** Laws of the exactly-once Spark→redis sink — k8's contract rebuilt on
   * the primitive redis actually has (MULTI/EXEC): per-(epoch, slot)
   * atomicity of entries + ledger watermark, idempotent replay, and the
@@ -267,10 +269,11 @@ class RedisEosSpec extends AnyFunSuite {
         kc.produce("src", 0, Seq((1000L + i, null, v.getBytes("UTF-8"))))
       }
       val spark0 = spark
+      val source = RelaySource.Kafka(KafkaAt(k.host, k.port), Seq("src"))
+      val sink = RelaySink.Redis(RedisAt(r.host, r.port), "rel", _ => "dst")
       def relay(crash: Option[String]) =
-        RedisEosRelay.relayOnce(spark0, k.host, k.port, Seq("src"),
-          _ => "dst", r.host, r.port, "rel", cap = 6L,
-          crashBeforeCommit = crash)
+        EosRelay.relayOnce(spark0, source, sink, cap = 6L,
+          Faults(crashBeforeCommit = crash))
       def ledger = r.kvGet("rel:{src/0}").map(new String(_, "UTF-8"))
       def entries = r.entries(RedisStreams.shardedKey("dst", 0L, true))
         .map(e => new String(e._2.head._2, "UTF-8"))
@@ -285,8 +288,7 @@ class RedisEosSpec extends AnyFunSuite {
         "a crashed epoch moved the ledger or leaked entries")
       // drain resumes off the ledger: the crashed range re-relays, then
       // the rest; a further pass moves nothing
-      val moved = RedisEosRelay.relayAll(spark0, k.host, k.port,
-        Seq("src"), _ => "dst", r.host, r.port, "rel", cap = 6L)
+      val moved = EosRelay.relayAll(spark0, source, sink, cap = 6L)
       assert(moved == 14L, s"drain relayed $moved, expected 14")
       assert(relay(None) == 0L, "a drained source must relay nothing")
       assert(entries == vals,
@@ -325,17 +327,16 @@ class RedisEosSpec extends AnyFunSuite {
           ()
         } finally rival.close()
       }
-      val moved = RedisEosRelay.relayOnce(graft.TestSession.spark,
-        k.host, k.port, Seq("nsrc"), _ => "ndst", r.host, r.port, "nw",
-        raceAfterRead = Some("nw-race"))
+      val source = RelaySource.Kafka(KafkaAt(k.host, k.port), Seq("nsrc"))
+      val sink = RelaySink.Redis(RedisAt(r.host, r.port), "nw", _ => "ndst")
+      val moved = EosRelay.relayOnce(graft.TestSession.spark, source, sink,
+        faults = Faults(raceAfterRead = Some("nw-race")))
       assert(moved == 4L,
         s"retry must relay exactly the remainder (4), moved $moved")
       val got = r.entries(RedisStreams.shardedKey("ndst", 0L, true))
         .map(e => new String(e._2.head._2, "UTF-8"))
       assert(got == vals, s"nil-retry lost/duplicated records: $got")
-      assert(RedisEosRelay.relayOnce(graft.TestSession.spark,
-        k.host, k.port, Seq("nsrc"), _ => "ndst", r.host, r.port,
-        "nw") == 0L)
+      assert(EosRelay.relayOnce(graft.TestSession.spark, source, sink) == 0L)
     } finally { kc.close(); k.close(); r.close() }
   }
 
@@ -381,8 +382,9 @@ class RedisEosSpec extends AnyFunSuite {
       // offsets [6, 9): committed records the drain must still reach
       (0 until 3).foreach(i => kc.produce("ab", 0,
         Seq((200L + i, null, s"good$i".getBytes("UTF-8")))))
-      val moved = RedisEosRelay.relayAll(spark, k.host, k.port, Seq("ab"),
-        _ + "_out", r.host, r.port, "abl", cap = 6L)
+      val moved = EosRelay.relayAll(spark,
+        RelaySource.Kafka(KafkaAt(k.host, k.port), Seq("ab")),
+        RelaySink.Redis(RedisAt(r.host, r.port), "abl", _ + "_out"), cap = 6L)
       assert(moved == 3L,
         s"drain must reach the committed records past the aborted range: $moved")
       val vals = r.entries(RedisStreams.shardedKey("ab_out", 0L, true))

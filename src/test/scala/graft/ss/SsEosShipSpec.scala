@@ -9,6 +9,7 @@ import graft.TestSession
 import graft.core.SeaMessage
 import graft.kafka.{EmbeddedKafka, KafkaClient}
 import graft.redis.{EmbeddedRedis, RedisStreams}
+import graft.relay.{EosRelay, Faults, KafkaAt, RedisAt, RelaySink, RelaySource}
 
 /** Laws of the exactly-once `.ss` → broker shipper: the frame-exact byte
   * cursor anchors in the DESTINATION (group offsets staged in the kafka
@@ -58,10 +59,11 @@ class SsEosShipSpec extends AnyFunSuite {
     try {
       kc.metadata(Seq("a_out", "b_out"))
       val spark0 = spark
+      val sink = RelaySink.Kafka(KafkaAt(k.host, k.port), "g_ship", "ship",
+        _ + "_out")
       def ship(cap: Long, crash: Option[String] = None) =
-        SsEosShip.shipKafkaOnce(spark0, Seq(path), _ + "_out",
-          k.host, k.port, "g_ship", "ship", capBytes = cap,
-          crashBeforeCommit = crash)
+        EosRelay.relayOnce(spark0, RelaySource.Ss(Seq(path)), sink, cap,
+          Faults(crashBeforeCommit = crash))
       // small byte cap: the first epoch ships a strict prefix
       val first = ship(cap = 200L)
       assert(first > 0L && first < 15L, s"cap must bound the epoch: $first")
@@ -73,8 +75,8 @@ class SsEosShipSpec extends AnyFunSuite {
       assert(committedValues(kc, "a_out") ++ committedValues(kc, "b_out")
         == mid, "a crashed epoch leaked frames past the LSO")
       // drain the rest; a drained file ships zero
-      val total = first + SsEosShip.shipKafkaAll(spark0, Seq(path),
-        _ + "_out", k.host, k.port, "g_ship", "ship", capBytes = 200L)
+      val total = first + EosRelay.relayAll(spark0, RelaySource.Ss(Seq(path)),
+        sink, cap = 200L)
       assert(total == 15L, s"shipped $total frames, want 15")
       assert(ship(cap = 1L << 20) == 0L, "a drained file must ship zero")
       // frame order per destination partition survives (a's shard 0 → p0)
@@ -104,15 +106,17 @@ class SsEosShipSpec extends AnyFunSuite {
     try {
       val spark0 = spark
       graft.ops.Failpoints.arm("rship-crash")
-      intercept[Exception](SsEosShip.shipRedisOnce(spark0, Seq(path),
-        identity, r.host, r.port, "shipled",
-        crashBeforeCommit = Some("rship-crash")))
+      val sink = RelaySink.Redis(RedisAt(r.host, r.port), "shipled", identity)
+      intercept[Exception](EosRelay.relayOnce(spark0,
+        RelaySource.Ss(Seq(path)), sink, 64L << 20,
+        Faults(crashBeforeCommit = Some("rship-crash"))))
       assert(r.entries(RedisStreams.shardedKey("c", 0L, true)).isEmpty &&
         r.kvGet("shipled:{clamp.ss}").isEmpty,
         "a crashed ship moved the ledger or leaked entries")
       // filtered ship: only stream c — skipme frames consume positions
-      val moved = SsEosShip.shipRedisAll(spark0, Seq(path), identity,
-        r.host, r.port, "shipled", onlyStreams = Some(Set("c")))
+      val moved = EosRelay.relayAll(spark0,
+        RelaySource.Ss(Seq(path), onlyStreams = Some(Set("c"))), sink,
+        64L << 20)
       assert(moved == 4L, s"shipped $moved, want 4 (filtered)")
       assert(r.entries(RedisStreams.shardedKey("skipme", 0L, true)).isEmpty,
         "filtered frames must not ship")
@@ -122,8 +126,8 @@ class SsEosShipSpec extends AnyFunSuite {
         s"frame order must survive the ms clamp: $got")
       // the cursor sits at EOF: a re-ship (unfiltered now) ships nothing —
       // skipped positions were consumed, not deferred
-      assert(SsEosShip.shipRedisAll(spark0, Seq(path), identity,
-        r.host, r.port, "shipled") == 0L,
+      assert(EosRelay.relayAll(spark0, RelaySource.Ss(Seq(path)), sink,
+        64L << 20) == 0L,
         "consumed positions re-shipped")
     } finally r.close()
   }
@@ -145,8 +149,9 @@ class SsEosShipSpec extends AnyFunSuite {
       // above every frame's ts
       val key = RedisStreams.shardedKey("f", 0L, sharded = true)
       rc.command(RedisStreams.xadd(key, 9999L, "pre".getBytes("UTF-8")): _*)
-      assert(SsEosShip.shipRedisAll(spark, Seq(path), identity,
-        r.host, r.port, "fl") == 4L)
+      assert(EosRelay.relayAll(spark, RelaySource.Ss(Seq(path)),
+        RelaySink.Redis(RedisAt(r.host, r.port), "fl", identity),
+        64L << 20) == 4L)
       val ids = r.entries(key).map(_._1)
       assert(ids.length == 5 && ids.sliding(2).forall {
         case Seq(a, b) => RedisStreams.idCompare(a, b) < 0
@@ -163,8 +168,8 @@ class SsEosShipSpec extends AnyFunSuite {
       w2.close()
       r.failXadds.set(1)
       val thrown = intercept[Exception] {
-        SsEosShip.shipRedisOnce(spark, Seq(path2), identity,
-          r.host, r.port, "fl2")
+        EosRelay.relayOnce(spark, RelaySource.Ss(Seq(path2)),
+          RelaySink.Redis(RedisAt(r.host, r.port), "fl2", identity), 64L << 20)
       }
       assert(Iterator.iterate(thrown: Throwable)(_.getCause)
         .takeWhile(_ != null).take(8).exists(t =>
@@ -204,8 +209,9 @@ class SsEosShipSpec extends AnyFunSuite {
         inject.command(RedisStreams.xadd("s:0", 9999L,
           "foreign".getBytes("UTF-8")): _*); ()
       }
-      val shipped = SsEosShip.shipRedisOnce(spark, Seq(p1, p2), identity,
-        r.host, r.port, "shrace", raceBeforeExec = Some("ship-race"))
+      val sink = RelaySink.Redis(RedisAt(r.host, r.port), "shrace", identity)
+      val shipped = EosRelay.relayOnce(spark, RelaySource.Ss(Seq(p1, p2)),
+        sink, 64L << 20, Faults(raceBeforeExec = Some("ship-race")))
       assert(shipped == 16L, s"shipped $shipped frames, want 16 — loss")
       val entries = r.entries("s:0")
       val vals = entries.map(e => new String(e._2.head._2, "UTF-8"))
@@ -219,8 +225,8 @@ class SsEosShipSpec extends AnyFunSuite {
       val ids = entries.map(e => RedisStreams.parseEntryId(e._1))
       assert(ids == ids.sorted, s"non-monotone ids: $ids")
       // both cursors advanced to their file ends — the drain is complete
-      assert(SsEosShip.shipRedisOnce(spark, Seq(p1, p2), identity,
-        r.host, r.port, "shrace") == 0L,
+      assert(EosRelay.relayOnce(spark, RelaySource.Ss(Seq(p1, p2)), sink,
+        64L << 20) == 0L,
         "drained files must ship zero")
     } finally { inject.close(); r.close() }
   }
@@ -238,8 +244,10 @@ class SsEosShipSpec extends AnyFunSuite {
     val k = new EmbeddedKafka
     try {
       val e = intercept[IllegalArgumentException] {
-        SsEosShip.shipKafkaAll(spark, Seq(s"$d1/part-0.ss", s"$d2/part-0.ss"),
-          identity, k.host, k.port, "gcol", "col")
+        EosRelay.relayAll(spark,
+          RelaySource.Ss(Seq(s"$d1/part-0.ss", s"$d2/part-0.ss")),
+          RelaySink.Kafka(KafkaAt(k.host, k.port), "gcol", "col", identity),
+          64L << 20)
       }
       assert(e.getMessage.contains("collide"), e.getMessage)
     } finally k.close()
@@ -262,16 +270,18 @@ class SsEosShipSpec extends AnyFunSuite {
       val torn = new java.io.File(path).length()
       val raf = new java.io.RandomAccessFile(path, "rw")
       try raf.setLength(full + (torn - full) / 2) finally raf.close()
-      assert(SsEosShip.shipKafkaAll(spark0, Seq(path), _ + "_lt",
-        k.host, k.port, "g_lt", "lt") == 15L,
+      val sink = RelaySink.Kafka(KafkaAt(k.host, k.port), "g_lt", "lt",
+        _ + "_lt")
+      assert(EosRelay.relayAll(spark0, RelaySource.Ss(Seq(path)), sink,
+        64L << 20) == 15L,
         "the torn tail frame must not ship")
       // rewrite the tail frame completely; only it ships
       val w2 = SsWriter.append(path)
       w2.write(SeaMessage("a", 0L, 99L, ts(9999L),
         "tail-complete".getBytes("UTF-8")))
       w2.close()
-      assert(SsEosShip.shipKafkaAll(spark0, Seq(path), _ + "_lt",
-        k.host, k.port, "g_lt", "lt") == 1L,
+      assert(EosRelay.relayAll(spark0, RelaySource.Ss(Seq(path)), sink,
+        64L << 20) == 1L,
         "completing the tail must unlock exactly the one tail frame")
     } finally { kc.close(); k.close() }
   }
@@ -282,23 +292,23 @@ class SsEosShipSpec extends AnyFunSuite {
       "nil-free commits, re-probing the ungated path (ADVICE r16)") {
     val keyA = ("gatehost", 1234, "jobA")
     val keyB = ("gatehost", 1234, "jobB")
-    SsEosShip.noteShipNil(keyA)
-    assert(SsEosShip.isGateContended(keyA), "a nil must gate its own job")
-    assert(!SsEosShip.isGateContended(keyB),
+    RelaySink.Redis.noteShipNil(keyA)
+    assert(RelaySink.Redis.isGateContended(keyA), "a nil must gate its own job")
+    assert(!RelaySink.Redis.isGateContended(keyB),
       "a different ledgerPrefix on the same node must stay ungated")
     // decay: GateCalmCommits nil-free commits un-gate the destination
-    (1 until SsEosShip.GateCalmCommits).foreach { _ =>
-      SsEosShip.noteShipApplied(keyA)
-      assert(SsEosShip.isGateContended(keyA),
+    (1 until RelaySink.Redis.GateCalmCommits).foreach { _ =>
+      RelaySink.Redis.noteShipApplied(keyA)
+      assert(RelaySink.Redis.isGateContended(keyA),
         "decay must take the FULL calm window")
     }
-    SsEosShip.noteShipApplied(keyA)
-    assert(!SsEosShip.isGateContended(keyA),
+    RelaySink.Redis.noteShipApplied(keyA)
+    assert(!RelaySink.Redis.isGateContended(keyA),
       "a calm window must un-gate the destination")
     // a fresh nil re-gates immediately and resets the calm counter
-    SsEosShip.noteShipNil(keyA)
-    SsEosShip.noteShipApplied(keyA)
-    assert(SsEosShip.isGateContended(keyA),
+    RelaySink.Redis.noteShipNil(keyA)
+    RelaySink.Redis.noteShipApplied(keyA)
+    assert(RelaySink.Redis.isGateContended(keyA),
       "one applied commit after a nil must not un-gate")
   }
 }
