@@ -3,6 +3,8 @@ package graft.iggy
 import java.io.{EOFException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
+import graft.core.WireBuffer
+
 /** Wire layer for the iggy backend: length-prefixed little-endian TCP
   * framing with u32 command codes, modeled on iggy's public TCP transport
   * (`request = [len][code][payload]`, `response = [status][len][payload]`)
@@ -141,23 +143,20 @@ object IggyWire {
   // ---- primitive codecs (little-endian, like iggy's binary protocol) ----
 
   final class Writer {
-    private val buf = new java.io.ByteArrayOutputStream()
-    def u8(v: Int): Writer = { buf.write(v & 0xff); this }
-    def u32(v: Int): Writer = {
-      buf.write(v & 0xff); buf.write((v >>> 8) & 0xff)
-      buf.write((v >>> 16) & 0xff); buf.write((v >>> 24) & 0xff); this
-    }
-    def u64(v: Long): Writer = { u32(v.toInt); u32((v >>> 32).toInt); this }
+    private[iggy] val buf = new WireBuffer
+    def u8(v: Int): Writer = { buf.u8(v); this }
+    def u32(v: Int): Writer = { buf.le32(v); this }
+    def u64(v: Long): Writer = { buf.le64(v); this }
     /** u128 LE as (low, high) u64 halves — iggy message ids. */
     def u128(lo: Long, hi: Long = 0L): Writer = { u64(lo); u64(hi) }
     def str(s: String): Writer = {
       val b = s.getBytes(UTF_8)
       require(b.length <= 255, s"name too long: $s")
-      u8(b.length); buf.write(b); this
+      u8(b.length); raw(b)
     }
     /** u32-length-prefixed string — LoginUser's optional version/context. */
     def lstr(s: String): Writer = {
-      val b = s.getBytes(UTF_8); u32(b.length); buf.write(b); this
+      val b = s.getBytes(UTF_8); u32(b.length); raw(b)
     }
     /** Published `Identifier` framing: `[kind u8][length u8][value]` —
       * kind 1 = numeric (u32 value), 2 = string (utf8 bytes).
@@ -165,7 +164,7 @@ object IggyWire {
     def identifier(name: String): Writer = {
       val b = name.getBytes(UTF_8)
       require(b.length <= 255, s"identifier too long: $name")
-      u8(2).u8(b.length); buf.write(b); this
+      u8(2).u8(b.length); raw(b)
     }
     def identifierNum(v: Long): Writer = u8(1).u8(4).u32(v.toInt)
     /** Published `Consumer` framing: `[kind u8][Identifier]`, kind
@@ -176,9 +175,9 @@ object IggyWire {
       u8(if (kind01 == 1) 2 else 1)
       if (name.isEmpty) identifierNum(0L) else identifier(name)
     }
-    def bytes(b: Array[Byte]): Writer = { u32(b.length); buf.write(b); this }
-    def raw(b: Array[Byte]): Writer = { buf.write(b); this }
-    def result(): Array[Byte] = buf.toByteArray
+    def bytes(b: Array[Byte]): Writer = { u32(b.length); raw(b) }
+    def raw(b: Array[Byte]): Writer = { buf.bytes(b); this }
+    def result(): Array[Byte] = buf.toArray
   }
 
   final class Reader(payload: Array[Byte]) {
@@ -422,14 +421,14 @@ object IggyWire {
   def writeRequest(out: OutputStream, code: Int, payload: Array[Byte]): Unit = {
     val w = new Writer
     w.u32(payload.length + 4).u32(code).raw(payload)
-    out.write(w.result())
+    out.write(w.buf.array, 0, w.buf.size)
   }
 
   /** `[u32 status][u32 len][payload]`. */
   def writeResponse(out: OutputStream, status: Int, payload: Array[Byte]): Unit = {
     val w = new Writer
     w.u32(status).u32(payload.length).raw(payload)
-    out.write(w.result())
+    out.write(w.buf.array, 0, w.buf.size)
   }
 
   def readRequest(in: InputStream): Option[(Int, Array[Byte])] = {

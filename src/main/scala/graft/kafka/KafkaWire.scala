@@ -3,6 +3,8 @@ package graft.kafka
 import java.io.{EOFException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
+import graft.core.WireBuffer
+
 /** The Apache Kafka wire protocol — the REAL public protocol (KIP-98 v2
   * record batches, CRC32C, zigzag varints, big-endian primitives), not a
   * private framing. Everything here is from the published protocol guide
@@ -117,9 +119,11 @@ object KafkaWire {
     * broker's produce-side decode guard catches it with the other
     * malformed-batch failures.
     */
-  final case class CorruptBatchException(at: Int, stored: Int, computed: Int)
+  final case class CorruptBatchException(at: Int, stored: Int, computed: Int,
+      detail: String = "")
       extends IllegalArgumentException(
-        f"record batch CRC mismatch at $at: stored 0x$stored%08x computed 0x$computed%08x")
+        if (detail.nonEmpty) s"corrupt record batch at $at: $detail"
+        else f"record batch CRC mismatch at $at: stored 0x$stored%08x computed 0x$computed%08x")
 
   /** Sentinel timestamps for ListOffsets (public semantics). */
   object Ts {
@@ -334,25 +338,22 @@ object KafkaWire {
   // ---- primitives: big-endian, per the protocol's type system ----
 
   final class Writer {
-    private val buf = new java.io.ByteArrayOutputStream()
-    def i8(v: Int): Writer = { buf.write(v & 0xff); this }
-    def i16(v: Int): Writer = { buf.write((v >>> 8) & 0xff); buf.write(v & 0xff); this }
-    def i32(v: Int): Writer = {
-      buf.write((v >>> 24) & 0xff); buf.write((v >>> 16) & 0xff)
-      buf.write((v >>> 8) & 0xff); buf.write(v & 0xff); this
-    }
-    def i64(v: Long): Writer = { i32((v >>> 32).toInt); i32(v.toInt); this }
+    private[kafka] val buf = new WireBuffer
+    def i8(v: Int): Writer = { buf.u8(v); this }
+    def i16(v: Int): Writer = { buf.be16(v); this }
+    def i32(v: Int): Writer = { buf.be32(v); this }
+    def i64(v: Long): Writer = { buf.be64(v); this }
     /** STRING: INT16 length + UTF-8. */
     def str(s: String): Writer = {
-      val b = s.getBytes(UTF_8); i16(b.length); buf.write(b); this
+      val b = s.getBytes(UTF_8); i16(b.length); raw(b)
     }
     /** NULLABLE_STRING: length -1 = null. */
     def nullableStr(s: String): Writer =
       if (s == null) i16(-1) else str(s)
     /** NULLABLE_BYTES: INT32 length, -1 = null. */
     def nullableBytes(b: Array[Byte]): Writer =
-      if (b == null) i32(-1) else { i32(b.length); buf.write(b); this }
-    def raw(b: Array[Byte]): Writer = { buf.write(b); this }
+      if (b == null) i32(-1) else { i32(b.length); raw(b) }
+    def raw(b: Array[Byte]): Writer = { buf.bytes(b); this }
     /** ARRAY: INT32 count then elements (written by `each`). */
     def array[T](xs: Seq[T])(each: (Writer, T) => Unit): Writer = {
       i32(xs.length); xs.foreach(x => each(this, x)); this
@@ -363,11 +364,11 @@ object KafkaWire {
     def varlong(v: Long): Writer = uvarlong((v << 1) ^ (v >> 63))
     private def uvarlong(v0: Long): Writer = {
       var v = v0
-      while ((v & ~0x7fL) != 0L) { buf.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      buf.write(v.toInt); this
+      while ((v & ~0x7fL) != 0L) { buf.u8(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
+      buf.u8(v.toInt); this
     }
-    def size: Int = buf.size()
-    def result(): Array[Byte] = buf.toByteArray
+    def size: Int = buf.size
+    def result(): Array[Byte] = buf.toArray
   }
 
   final class Reader(payload: Array[Byte], private var pos: Int = 0) {
@@ -430,6 +431,7 @@ object KafkaWire {
     val Crc = 17            // UINT32 = CRC32C of [21, end)
     val Attributes = 21     // INT16
     val Overhead = 61       // first record starts here
+    val MinLength = Overhead - LeaderEpoch // batchLength of the bare header
   }
 
   /** Batch compression codecs (attributes bits 0–2 of the v2 layout; the
@@ -508,9 +510,11 @@ object KafkaWire {
       s"unsupported batch codec $codec (none/gzip/snappy/lz4/zstd)")
     val baseOffset = records.head.offset
     val baseTs = records.head.tsMs
+    var maxTs = Long.MinValue
     val recs = new Writer // the records blob (the compressible region)
+    val rec = new Writer // one record, reused across the batch
     records.foreach { r =>
-      val rec = new Writer
+      rec.buf.reset()
       rec.i8(0) // record attributes
       rec.varlong(r.tsMs - baseTs)
       rec.varint((r.offset - baseOffset).toInt)
@@ -519,41 +523,36 @@ object KafkaWire {
       if (r.value == null) rec.varint(-1)
       else { rec.varint(r.value.length); rec.raw(r.value) }
       rec.varint(0) // headers
-      val recBytes = rec.result()
-      recs.varint(recBytes.length)
-      recs.raw(recBytes)
+      recs.varint(rec.size)
+      recs.buf.bytes(rec.buf.array, 0, rec.size)
+      maxTs = math.max(maxTs, r.tsMs)
     }
-    val recordBytes =
-      if (codec == Codec.None) recs.result()
-      else {
-        val bos = new java.io.ByteArrayOutputStream
-        val cs = Codec.wrap(codec, bos)
-        cs.write(recs.result()); cs.close()
-        bos.toByteArray
-      }
-    val body = new Writer // attributes .. records (the CRC'd region)
-    // attributes: codec bits 0-2, create-time timestamps, bit 4
-    // transactional, bit 5 control
-    body.i16(codec | (if (transactional) 0x10 else 0) |
-      (if (control) 0x20 else 0))
-    body.i32((records.last.offset - baseOffset).toInt) // lastOffsetDelta
-    body.i64(baseTs)
-    body.i64(records.map(_.tsMs).max)
-    body.i64(producerId)
-    body.i16(producerEpoch)
-    body.i32(baseSequence)
-    body.i32(records.length)
-    body.raw(recordBytes)
-    val crcRegion = body.result()
-    val crc = new java.util.zip.CRC32C
-    crc.update(crcRegion)
     val w = new Writer
     w.i64(baseOffset)
-    w.i32(crcRegion.length + 4 + 1 + 4) // batchLength: epoch+magic+crc+region
+    w.i32(0)  // batchLength, set below: bytes after this field
     w.i32(-1) // partitionLeaderEpoch
     w.i8(2)   // magic
-    w.i32(crc.getValue.toInt) // UINT32
-    w.raw(crcRegion)
+    w.i32(0)  // CRC32C of [attributes, end), set below (UINT32)
+    // attributes: codec bits 0-2, create-time timestamps, bit 4
+    // transactional, bit 5 control
+    w.i16(codec | (if (transactional) 0x10 else 0) |
+      (if (control) 0x20 else 0))
+    w.i32((records.last.offset - baseOffset).toInt) // lastOffsetDelta
+    w.i64(baseTs)
+    w.i64(maxTs)
+    w.i64(producerId)
+    w.i16(producerEpoch)
+    w.i32(baseSequence)
+    w.i32(records.length)
+    if (codec == Codec.None) w.buf.bytes(recs.buf.array, 0, recs.size)
+    else {
+      val cs = Codec.wrap(codec, w.buf)
+      cs.write(recs.buf.array, 0, recs.size); cs.close()
+    }
+    val crc = new java.util.zip.CRC32C
+    crc.update(w.buf.array, Batch.Attributes, w.size - Batch.Attributes)
+    w.buf.putBe32(Batch.Length, w.size - Batch.LeaderEpoch)
+    w.buf.putBe32(Batch.Crc, crc.getValue.toInt)
     w.result()
   }
 
@@ -623,6 +622,9 @@ object KafkaWire {
       val magic = r.i8()
       require(magic == 2, s"unsupported record batch magic $magic")
       val crcStored = r.i32()
+      if (batchLength < Batch.MinLength)
+        throw CorruptBatchException(at, crcStored, 0, s"batchLength " +
+          s"$batchLength is shorter than the ${Batch.MinLength}-byte v2 header")
       val crc = new java.util.zip.CRC32C
       crc.update(bytes, at + Batch.Attributes, batchLength - 9)
       if (crc.getValue.toInt != crcStored)
@@ -725,12 +727,11 @@ object KafkaWire {
   /** Write `[size][header v1][body]`. */
   def writeRequest(out: OutputStream, apiKey: Int, apiVersion: Int,
       correlationId: Int, clientId: String, body: Array[Byte]): Unit = {
-    val h = new Writer
-    h.i16(apiKey).i16(apiVersion).i32(correlationId).nullableStr(clientId)
-    val header = h.result()
     val w = new Writer
-    w.i32(header.length + body.length).raw(header).raw(body)
-    out.write(w.result())
+    w.i32(0).i16(apiKey).i16(apiVersion).i32(correlationId)
+      .nullableStr(clientId).raw(body)
+    w.buf.putBe32(0, w.size - 4)
+    out.write(w.buf.array, 0, w.size)
   }
 
   /** Write `[size][correlation_id][body]`. */
@@ -738,7 +739,7 @@ object KafkaWire {
       body: Array[Byte]): Unit = {
     val w = new Writer
     w.i32(body.length + 4).i32(correlationId).raw(body)
-    out.write(w.result())
+    out.write(w.buf.array, 0, w.size)
   }
 
   /** (apiKey, apiVersion, correlationId, clientId, body) or None on EOF. */

@@ -1,7 +1,9 @@
 package graft.redis
 
-import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream, OutputStream}
+import java.io.{BufferedOutputStream, EOFException, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
+
+import graft.core.{WireBuffer, WireInput}
 
 /** RESP2 wire codec (the Redis serialization protocol), dependency-free —
   * the zero-egress build has no redis client library, and the protocol is
@@ -25,39 +27,41 @@ object Resp {
 
   /** Encode a command as a RESP array of bulk strings. */
   def encodeCommand(args: Seq[Array[Byte]]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(64)
-    out.write(s"*${args.length}\r\n".getBytes(UTF_8))
-    args.foreach { a =>
-      out.write(s"$$${a.length}\r\n".getBytes(UTF_8))
-      out.write(a)
-      out.write('\r'); out.write('\n')
-    }
-    out.toByteArray
+    val out = new WireBuffer(args.foldLeft(16)(_ + _.length + 16))
+    head(out, '*', args.length)
+    args.foreach(a => bulk(out, a))
+    out.toArray
   }
+
+  /** A `<tag><n>\r\n` length, count or integer line. */
+  private def head(out: WireBuffer, tag: Char, n: Long): WireBuffer =
+    out.u8(tag).decimal(n).u8('\r').u8('\n')
+
+  private def bulk(out: WireBuffer, b: Array[Byte]): Unit =
+    head(out, '$', b.length).bytes(b).u8('\r').u8('\n')
 
   def encodeCommandS(args: String*): Array[Byte] =
     encodeCommand(args.map(_.getBytes(UTF_8)))
 
   /** Encode a reply (used by the in-process test server). */
   def encodeValue(v: Value): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(64)
+    val out = new WireBuffer
+    def line(tag: Char, s: String): Unit =
+      out.u8(tag).bytes(s.getBytes(UTF_8)).u8('\r').u8('\n')
     def go(v: Value): Unit = v match {
-      case Simple(s) => out.write(s"+$s\r\n".getBytes(UTF_8))
-      case Err(m) => out.write(s"-$m\r\n".getBytes(UTF_8))
-      case Num(n) => out.write(s":$n\r\n".getBytes(UTF_8))
-      case Bulk(b) =>
-        out.write(s"$$${b.length}\r\n".getBytes(UTF_8))
-        out.write(b); out.write('\r'); out.write('\n')
-      case NullBulk => out.write("$-1\r\n".getBytes(UTF_8))
-      case Arr(items) =>
-        out.write(s"*${items.length}\r\n".getBytes(UTF_8))
-        items.foreach(go)
-      case NullArr => out.write("*-1\r\n".getBytes(UTF_8))
+      case Simple(s) => line('+', s)
+      case Err(m) => line('-', m)
+      case Num(n) => head(out, ':', n)
+      case Bulk(b) => bulk(out, b)
+      case NullBulk => head(out, '$', -1)
+      case Arr(items) => head(out, '*', items.length); items.foreach(go)
+      case NullArr => head(out, '*', -1)
     }
     go(v)
-    out.toByteArray
+    out.toArray
   }
 
+  /** A simple-string or error line, bytes widened to chars. */
   private def readLine(in: InputStream): String = {
     val sb = new StringBuilder
     var c = in.read()
@@ -66,21 +70,53 @@ object Resp {
       sb.append(c.toChar)
       c = in.read()
     }
-    if (in.read() != '\n') throw new EOFException("RESP line missing \\n")
+    lineEnd(in)
     sb.result()
+  }
+
+  private def lineEnd(in: InputStream): Unit =
+    if (in.read() != '\n') throw new EOFException("RESP line missing \\n")
+
+  /** An integer, length or count line read as digits in place. Accepts and
+    * rejects what `line.toLong` does (an optional sign, then one or more
+    * ASCII digits, in range), and consumes the whole line before a
+    * malformed one throws `NumberFormatException`.
+    */
+  private def readNum(in: InputStream): Long = {
+    var c = in.read()
+    val neg = c == '-'
+    if (neg || c == '+') c = in.read()
+    // accumulate negatively, as Long.parseLong does, so MinValue fits
+    val limit = if (neg) Long.MinValue else -Long.MaxValue
+    var acc = 0L
+    var ok = c != '\r'
+    while (c != '\r') {
+      if (c < 0) throw new EOFException("RESP stream closed mid-line")
+      val d = c - '0'
+      if (d < 0 || d > 9 || acc < limit / 10 || acc * 10 < limit + d) ok = false
+      else acc = acc * 10 - d
+      c = in.read()
+    }
+    lineEnd(in)
+    if (!ok) throw new NumberFormatException("malformed RESP integer line")
+    if (neg) acc else -acc
+  }
+
+  private def readInt(in: InputStream): Int = {
+    val n = readNum(in)
+    if (n == n.toInt) n.toInt else throw new NumberFormatException(s"RESP length $n out of range")
   }
 
   /** Parse one RESP value from the stream (blocking). */
   def parse(in: InputStream): Value = {
     val t = in.read()
     if (t < 0) throw new EOFException("RESP stream closed")
-    val line = readLine(in)
     t.toChar match {
-      case '+' => Simple(line)
-      case '-' => Err(line)
-      case ':' => Num(line.toLong)
+      case '+' => Simple(readLine(in))
+      case '-' => Err(readLine(in))
+      case ':' => Num(readNum(in))
       case '$' =>
-        val n = line.toInt
+        val n = readInt(in)
         if (n < 0) NullBulk
         else {
           val buf = new Array[Byte](n)
@@ -95,15 +131,19 @@ object Resp {
           Bulk(buf)
         }
       case '*' =>
-        val n = line.toInt
+        val n = readInt(in)
         if (n < 0) NullArr
-        else Arr((0 until n).map(_ => parse(in)))
+        else Arr(Vector.fill(n)(parse(in)))
       case other =>
+        readLine(in)
         throw new IllegalArgumentException(s"unknown RESP type byte '$other'")
     }
   }
 
-  /** Buffered copies — sized for pipelined command batches. */
-  def buffered(in: InputStream): InputStream = new BufferedInputStream(in, 1 << 16)
+  /** The read side of one connection, buffered for [[parse]]'s
+    * byte-at-a-time reads by an unsynchronized [[WireInput]]. Not
+    * thread-safe: one per connection, read by one thread at a time.
+    */
+  def buffered(in: InputStream): InputStream = new WireInput(in)
   def buffered(out: OutputStream): OutputStream = new BufferedOutputStream(out, 1 << 16)
 }

@@ -1,9 +1,9 @@
 package graft.ss
 
-import java.io.{ByteArrayOutputStream, DataOutputStream, EOFException}
+import java.io.EOFException
 import java.nio.charset.StandardCharsets.UTF_8
 
-import graft.core.SeaMessage
+import graft.core.{SeaMessage, WireBuffer}
 
 /** The `.ss` container format — seekable, beacon-indexed, CRC-checked
   * (spec: sea-streamer-file/src/format.rs:1-59). All integers big-endian.
@@ -27,6 +27,9 @@ object SsFormat {
   final val DefaultFileSizeLimit: Long = 16L * 1024 * 1024 * 1024
 
   final val EosPayload = "EOS"
+
+  /** Smallest beacon: 0x0D, u32 remaining, u8 count 0, 0x0D. */
+  final val MinBeaconSize = 7
 
   /** Marker max byte size: short-string max (1+255) + shard + seq + ts + crc16. */
   final val MarkerMaxSize: Int = 256 + 8 + 8 + 8 + 2
@@ -64,26 +67,21 @@ object SsFormat {
 
   // ---- encoding ---------------------------------------------------------
 
-  private def shortString(out: DataOutputStream, s: String): Unit = {
+  private def shortString(out: WireBuffer, s: String): WireBuffer = {
     val bytes = s.getBytes(UTF_8)
     require(bytes.length <= 255, s"String too long: ${bytes.length}")
-    out.writeByte(bytes.length)
-    out.write(bytes)
+    out.u8(bytes.length).bytes(bytes)
   }
 
   def encodeHeader(h: SsHeader): Array[Byte] = {
-    val buf = new ByteArrayOutputStream(HeaderSize)
-    val out = new DataOutputStream(buf)
-    out.writeByte(ByteMark0); out.writeByte(ByteMark1); out.writeByte(Version)
-    shortString(out, h.fileName)
-    out.writeLong(h.createdAtMillis)
-    out.writeInt(h.beaconInterval)
-    val padding = HeaderSize - buf.size()
+    val out = new WireBuffer(HeaderSize)
+    out.u8(ByteMark0).u8(ByteMark1).u8(Version)
+    shortString(out, h.fileName).be64(h.createdAtMillis).be32(h.beaconInterval)
+    val padding = HeaderSize - out.size
     require(padding >= 1, s"File name too long for header: ${h.fileName}")
     var i = 0
-    while (i < padding - 1) { out.writeByte(0); i += 1 }
-    out.writeByte(Cr)
-    buf.toByteArray
+    while (i < padding - 1) { out.u8(0); i += 1 }
+    out.u8(Cr).toArray
   }
 
   /** Message frame = header + u32 size + payload + u16 crc + 0x0D.
@@ -91,46 +89,43 @@ object SsFormat {
     */
   def encodeMessage(m: SeaMessage): (Array[Byte], Int) = {
     val payload = if (m.payload == null) Array.emptyByteArray else m.payload
-    val buf = new ByteArrayOutputStream(64 + payload.length)
-    val out = new DataOutputStream(buf)
-    shortString(out, m.stream_key)
-    out.writeLong(m.shard_id)
-    out.writeLong(m.sequence)
-    out.writeLong(m.timestamp.getTime)
-    out.writeInt(payload.length)
-    out.write(payload)
+    val out = new WireBuffer(64 + payload.length)
+    shortString(out, m.stream_key).be64(m.shard_id).be64(m.sequence)
+      .be64(m.timestamp.getTime).be32(payload.length).bytes(payload)
     val crc = Crc16Cdma2000(payload)
-    out.writeShort(crc)
-    out.writeByte(Cr)
-    (buf.toByteArray, crc)
+    (out.be16(crc).u8(Cr).toArray, crc)
   }
 
   def encodeBeacon(b: Beacon): Array[Byte] = {
     require(b.items.length <= 255, "TooManyBeacon")
-    val buf = new ByteArrayOutputStream(b.size)
-    val out = new DataOutputStream(buf)
-    out.writeByte(Cr)
-    out.writeInt(b.remainingMessagesBytes)
-    out.writeByte(b.items.length)
+    val out = new WireBuffer(b.size)
+    out.u8(Cr).be32(b.remainingMessagesBytes).u8(b.items.length)
     b.items.foreach { m =>
-      shortString(out, m.streamKey)
-      out.writeLong(m.shardId)
-      out.writeLong(m.maxSeqNo)
-      out.writeLong(m.maxTimestampMillis)
-      out.writeShort(m.runningChecksum)
+      shortString(out, m.streamKey).be64(m.shardId).be64(m.maxSeqNo)
+        .be64(m.maxTimestampMillis).be16(m.runningChecksum)
     }
-    out.writeByte(Cr)
-    buf.toByteArray
+    out.u8(Cr).toArray
   }
 
   // ---- decoding ---------------------------------------------------------
 
-  /** Byte-at-a-time decode primitives over an arbitrary `readByte`. Used by
-    * [[SsReader]], whose readByte transparently consumes beacons at interval
-    * boundaries (that is how spliced messages come back together).
+  /** Decode primitives over an arbitrary `readByte`. Used by [[SsReader]],
+    * whose reader transparently consumes beacons at interval boundaries
+    * (that is how spliced messages come back together).
     */
   trait ByteReader {
     def readByte(): Int // 0..255, or throws EOFException
+
+    /** Reads exactly `n` bytes into `a(off until off + n)`, or throws
+      * `EOFException` once the input ends, with the bytes before the end
+      * consumed. Byte payloads ([[readFully]]) go through here. The
+      * default is one [[readByte]] per byte; readers over a buffer
+      * override it with a bulk copy.
+      */
+    def readInto(a: Array[Byte], off: Int, n: Int): Unit = {
+      var i = 0
+      while (i < n) { a(off + i) = readByte().toByte; i += 1 }
+    }
 
     /** Skip n bytes; implementations may override with a bulk skip. */
     def skipFully(n: Int): Unit = {
@@ -140,8 +135,7 @@ object SsFormat {
 
     final def readFully(n: Int): Array[Byte] = {
       val a = new Array[Byte](n)
-      var i = 0
-      while (i < n) { a(i) = readByte().toByte; i += 1 }
+      readInto(a, 0, n)
       a
     }
     final def readU16(): Int = (readByte() << 8) | readByte()
@@ -168,7 +162,11 @@ object SsFormat {
       }
     }
     val name = r.readShortString()
-    SsHeader(name, r.readU64(), r.readU32().toInt)
+    val h = SsHeader(name, r.readU64(), r.readU32())
+    if (h.beaconInterval < MinBeaconSize)
+      throw FormatException(s"Beacon interval ${h.beaconInterval} cannot " +
+        s"hold a $MinBeaconSize-byte beacon")
+    h
   }
 
   /** Reads one message frame (after any leading beacon has been consumed by

@@ -1,11 +1,11 @@
 package graft.ss
 
-import java.io.{BufferedInputStream, EOFException, InputStream}
+import java.io.EOFException
 import java.nio.ByteBuffer
 import java.nio.channels.{Channels, FileChannel}
 import java.nio.file.{Paths, StandardOpenOption}
 
-import graft.core.{Envelope, SeaMessage}
+import graft.core.{Envelope, SeaMessage, WireInput}
 import graft.ss.SsFormat._
 
 /** One decoded frame plus its byte extent in the file. */
@@ -25,9 +25,16 @@ final case class SsRecord(
   * (sea-streamer-file/src/messages.rs:144-173) — this is what makes the file
   * SPLITTABLE for parallel scan: split k reads messages whose frame *starts*
   * in [beacon_k, beacon_k+stride).
+  *
+  * Bytes come from `src`, which the reader owns and closes: for files, the
+  * [[SsReader.ChannelBytes]] buffer over the file channel. The boundary
+  * rule: a beacon is consumed exactly when the read offset reaches
+  * `nextBoundary`, the first positive multiple of the interval at or after
+  * it, so a bulk read runs at most `nextBoundary - offset` bytes (always
+  * positive between beacons) and a payload costs one copy per beacon span.
   */
 final class SsReader private[ss] (
-    in: InputStream,
+    src: ByteReader,
     val header: SsHeader,
     startOffset: Long,
     verifyChecksum: Boolean,
@@ -45,61 +52,71 @@ final class SsReader private[ss] (
 
   private val interval: Long = header.beaconInterval.toLong
   private var offset: Long = startOffset
+  private var nextBoundary: Long = boundaryAtOrAfter(startOffset)
   private var eosSeen = false
   private var truncated = false
   private var lastBeaconVar: Option[Beacon] = None
 
+  private def boundaryAtOrAfter(at: Long): Long =
+    math.max(1L, (at + interval - 1) / interval) * interval
+
   /** Raw reader: advances offset, no boundary interception (beacon bodies). */
   private val raw: ByteReader = new ByteReader {
-    def readByte(): Int = {
-      val b = in.read()
-      if (b < 0) throw new EOFException
-      offset += 1
-      b
+    def readByte(): Int = { val b = src.readByte(); offset += 1; b }
+    override def readInto(a: Array[Byte], off: Int, n: Int): Unit = {
+      src.readInto(a, off, n); offset += n
     }
+    override def skipFully(n: Int): Unit = { src.skipFully(n); offset += n }
   }
 
   /** Boundary-aware reader: consumes any beacon sitting at an interval
-    * boundary before handing out the next message byte.
+    * boundary before handing out the next message byte; bulk reads and
+    * skips run span by span between boundaries.
     */
   private val demux: ByteReader = new ByteReader {
     def readByte(): Int = {
-      if (offset > 0 && offset % interval == 0) consumeBeacon()
+      while (offset >= nextBoundary) consumeBeacon()
       raw.readByte()
     }
+    override def readInto(a: Array[Byte], off: Int, n: Int): Unit =
+      bySpan(n)((done, k) => raw.readInto(a, off + done, k))
+    override def skipFully(n: Int): Unit = bySpan(n)((_, k) => raw.skipFully(k))
+  }
 
-    /** Bulk skip that still consumes beacons at interval boundaries. */
-    override def skipFully(n: Int): Unit = {
-      var remaining = n.toLong
-      while (remaining > 0) {
-        if (offset > 0 && offset % interval == 0) consumeBeacon()
-        val chunk = math.min(remaining, interval - (offset % interval))
-        var done = 0L
-        while (done < chunk) {
-          val s = in.skip(chunk - done)
-          if (s > 0) { offset += s; done += s }
-          else { raw.readByte(); done += 1 } // advances offset; EOF throws
-        }
-        remaining -= chunk
-      }
+  /** Runs `step(done, k)` over `n` bytes in spans that end at or before
+    * the next boundary, consuming the beacon there first.
+    */
+  private def bySpan(n: Int)(step: (Int, Int) => Unit): Unit = {
+    var done = 0
+    while (done < n) {
+      while (offset >= nextBoundary) consumeBeacon()
+      val k = math.min(n - done, nextBoundary - offset).toInt
+      step(done, k)
+      done += k
     }
   }
 
-  private def consumeBeacon(): Unit =
+  private def consumeBeacon(): Unit = {
     lastBeaconVar = Some(decodeBeacon(raw))
+    nextBoundary = boundaryAtOrAfter(offset)
+  }
 
   // Split start: drop the partial message spliced under the starting beacon.
   // Loop because a long frame can fully bridge an interval (rewind law,
   // messages.rs:144-173: skip min(remaining, interval - beaconSize)).
   locally {
-    while (offset > 0 && offset % interval == 0 && !truncated) {
+    while (offset == nextBoundary && !truncated) {
       try {
         val beacon = decodeBeacon(raw)
         lastBeaconVar = Some(beacon)
         val skip = math.min(
           beacon.remainingMessagesBytes.toLong,
           interval - beacon.size)
-        raw.readFully(skip.toInt)
+        if (skip < 0)
+          throw FormatException(s"Beacon at ${offset - beacon.size} " +
+            s"claims $skip spliced bytes")
+        raw.skipFully(skip.toInt)
+        nextBoundary = boundaryAtOrAfter(offset)
       } catch { case _: EOFException => truncated = true }
     }
   }
@@ -155,10 +172,49 @@ final class SsReader private[ss] (
   def iterator: Iterator[SsRecord] =
     Iterator.continually(next()).takeWhile(_.isDefined).map(_.get)
 
-  def close(): Unit = in.close()
+  def close(): Unit = src match {
+    case c: AutoCloseable => c.close()
+    case _ => ()
+  }
 }
 
 object SsReader {
+
+  /** File bytes through one reusable [[WireInput]] buffer over the
+    * channel, from its position: [[readInto]] copies whole spans, and
+    * [[skipFully]] skips the buffer, then seeks.
+    */
+  private[ss] final class ChannelBytes(ch: FileChannel, bufferSize: Int = 1 << 16)
+      extends ByteReader with AutoCloseable {
+    private val in = new WireInput(Channels.newInputStream(ch), bufferSize)
+
+    def readByte(): Int = { val b = in.read(); if (b < 0) throw new EOFException; b }
+    override def readInto(a: Array[Byte], off: Int, n: Int): Unit =
+      if (in.read(a, off, n) < n) throw new EOFException
+    // a file channel skips short only at its end
+    override def skipFully(n: Int): Unit = if (in.skip(n) < n) throw new EOFException
+    def close(): Unit = ch.close()
+  }
+
+  private def headerOf(ch: FileChannel, path: String): SsHeader = {
+    val buf = ByteBuffer.allocate(HeaderSize)
+    while (buf.hasRemaining)
+      if (ch.read(buf) < 0) throw new EOFException(s"File shorter than header: $path")
+    decodeHeader(buf.array())
+  }
+
+  /** A reader over `path` from the offset `start` picks given its header. */
+  private def openFrom(path: String, verifyChecksum: Boolean, skim: Boolean,
+      surfaceInternal: Boolean)(start: SsHeader => Long): SsReader = {
+    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
+    try {
+      val header = headerOf(ch, path)
+      val at = start(header)
+      ch.position(at)
+      new SsReader(new ChannelBytes(ch), header, at, verifyChecksum, skim,
+        surfaceInternal)
+    } catch { case e: Throwable => ch.close(); throw e }
+  }
 
   /** Decode the beacon sitting at an exact interval boundary (split-pruning
     * support: the beacon's markers carry prefix-max seq/ts per stream).
@@ -168,31 +224,14 @@ object SsReader {
     try {
       if (offset >= ch.size()) return None
       ch.position(offset)
-      val in = new BufferedInputStream(Channels.newInputStream(ch), 1 << 14)
-      val r = new ByteReader {
-        def readByte(): Int = {
-          val b = in.read()
-          if (b < 0) throw new EOFException
-          b
-        }
-      }
-      try Some(decodeBeacon(r))
+      try Some(decodeBeacon(new ChannelBytes(ch, 1 << 14)))
       catch { case _: EOFException => None }
     } finally ch.close()
   }
 
   def readHeader(path: String): SsHeader = {
     val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    try {
-      val buf = ByteBuffer.allocate(HeaderSize)
-      var n = 0
-      while (n < HeaderSize) {
-        val r = ch.read(buf)
-        if (r < 0) throw new EOFException(s"File shorter than header: $path")
-        n += r
-      }
-      decodeHeader(buf.array())
-    } finally ch.close()
+    try headerOf(ch, path) finally ch.close()
   }
 
   /** Sequential read from the start of the data. */
@@ -206,40 +245,15 @@ object SsReader {
     */
   def openAtOffset(path: String, byteOffset: Long, verifyChecksum: Boolean = true,
       skim: Boolean = false): SsReader = {
-    if (byteOffset <= HeaderSize) return open(path, verifyChecksum, skim)
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    val buf = ByteBuffer.allocate(HeaderSize)
-    var n = 0
-    while (n < HeaderSize) {
-      val r = ch.read(buf)
-      if (r < 0) { ch.close(); throw new EOFException(s"File shorter than header: $path") }
-      n += r
-    }
-    val header = decodeHeader(buf.array())
-    ch.position(byteOffset)
-    new SsReader(
-      new BufferedInputStream(Channels.newInputStream(ch), 1 << 16),
-      header, byteOffset, verifyChecksum, skim)
+    if (byteOffset <= HeaderSize) open(path, verifyChecksum, skim)
+    else openFrom(path, verifyChecksum, skim, surfaceInternal = false)(_ => byteOffset)
   }
 
   /** Positioned read from the N-th beacon boundary (0 = right after header). */
   def openAt(path: String, nthBeacon: Long, verifyChecksum: Boolean = true,
-      skim: Boolean = false, surfaceInternal: Boolean = false): SsReader = {
-    val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    val buf = ByteBuffer.allocate(HeaderSize)
-    var n = 0
-    while (n < HeaderSize) {
-      val r = ch.read(buf)
-      if (r < 0) { ch.close(); throw new EOFException(s"File shorter than header: $path") }
-      n += r
-    }
-    val header = decodeHeader(buf.array())
-    val start =
+      skim: Boolean = false, surfaceInternal: Boolean = false): SsReader =
+    openFrom(path, verifyChecksum, skim, surfaceInternal) { header =>
       if (nthBeacon <= 0) HeaderSize.toLong
       else nthBeacon * header.beaconInterval.toLong
-    ch.position(start)
-    new SsReader(
-      new BufferedInputStream(Channels.newInputStream(ch), 1 << 16),
-      header, start, verifyChecksum, skim, surfaceInternal)
-  }
+    }
 }

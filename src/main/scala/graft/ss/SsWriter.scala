@@ -181,15 +181,7 @@ object SsWriter {
         var k = 1L
         while (k * interval < cut) {
           bch.position(k * interval)
-          val in = new java.io.BufferedInputStream(
-            java.nio.channels.Channels.newInputStream(bch), 1 << 14)
-          val br = new ByteReader {
-            def readByte(): Int = {
-              val b = in.read()
-              if (b < 0) throw new java.io.EOFException
-              b
-            }
-          }
+          val br = new SsReader.ChannelBytes(bch, 1 << 14)
           try markers += decodeBeacon(br).items.length
           catch { case _: java.io.EOFException => () }
           k += 1

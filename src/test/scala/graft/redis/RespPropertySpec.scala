@@ -81,4 +81,53 @@ class RespPropertySpec extends AnyFunSuite {
         }
     }
   }
+
+  private def parseBytes(b: Array[Byte]): Resp.Value =
+    Resp.parse(Resp.buffered(new ByteArrayInputStream(b)))
+
+  private def parseLine(s: String): Resp.Value =
+    parseBytes(s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+
+  test("integer, length and count lines accept and reject what toLong/toInt do") {
+    val fixed = Seq("", "-", "+", "0", "-0", "+7", "007", "12a", " 1", "1 ",
+      "-1", "--1", "+-1", "9223372036854775807", "9223372036854775808",
+      "-9223372036854775808", "-9223372036854775809", "2147483647",
+      "2147483648", "-2147483648", "-2147483649", "99999999999999999999",
+      "\u00ef\u00bc\u0091", "1\n2")
+    val random = (1 to 300).flatMap { i =>
+      Gen.chooseNum(0, 22).flatMap(n => Gen.listOfN(n,
+        Gen.oneOf("0123456789+- a\u00e9".toSeq)).map(_.mkString))
+        .apply(Gen.Parameters.default, Seed(i.toLong * 6007))
+    }
+    (fixed ++ random).foreach { line =>
+      val asLong = scala.util.Try(line.toLong)
+      scala.util.Try(parseLine(s":$line\r\n")) match {
+        case scala.util.Success(Resp.Num(n)) => assert(asLong.toOption.contains(n), line)
+        case scala.util.Failure(_: NumberFormatException) => assert(asLong.isFailure, line)
+        case other => fail(s"':$line': $other")
+      }
+      val asInt = scala.util.Try(line.toInt)
+      // a count line: an array of that many empty bulks, or the null array
+      val items = asInt.toOption.filter(n => n > 0 && n < 100).getOrElse(0)
+      scala.util.Try(parseLine(s"*$line\r\n" + "$0\r\n\r\n" * items)) match {
+        case scala.util.Success(Resp.NullArr) => assert(asInt.toOption.exists(_ < 0), line)
+        case scala.util.Success(Resp.Arr(xs)) =>
+          assert(asInt.toOption.contains(xs.size), line)
+        case scala.util.Failure(_: NumberFormatException) => assert(asInt.isFailure, line)
+        case scala.util.Failure(_: java.io.EOFException) =>
+          assert(asInt.toOption.exists(_ >= 100), line) // more items than sent
+        case other => fail(s"'*$line': $other")
+      }
+    }
+  }
+
+  test("short reads are EOFException; unknown type bytes are refused") {
+    Seq("", ":12", "$5\r\nab", "$3\r\nabc", "$3\r\nabc\r", "*2\r\n:1\r\n",
+      "+OK", "-ERR x", "$", "*").foreach { wire =>
+      intercept[java.io.EOFException](parseLine(wire))
+    }
+    intercept[java.io.EOFException](parseLine(":12\rX"))
+    intercept[java.io.EOFException](parseLine("$1\r\naXY"))
+    intercept[IllegalArgumentException](parseLine("?what\r\n"))
+  }
 }
